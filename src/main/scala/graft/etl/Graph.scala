@@ -624,7 +624,7 @@ object Graph {
       // round, redundant but harmless under the final min), and the
       // per-hop groupBy-min keeps every intermediate bounded by the
       // reachable-node count. The default k=2 is measured, not guessed
-      // (dev.HopsBench on the q240 +1/×2 lattice at sf0.1: k=1 10.7 s,
+      // (q240 +1/×2 lattice, sf0.1, local[32], 2026-08-14: k=1 10.7 s,
       // k=2 7.2 s, k=4 9.5 s, k=8 11.6 s): past k=2 the redundant
       // dominated-candidate work of the extra in-plan hops outgrows the
       // saved scheduler round-trips on wide wavefronts.

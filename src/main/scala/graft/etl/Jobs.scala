@@ -1,15 +1,17 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.sql.execution.QueryExecution
 
 /** Job execution model (SURVEY.md §2.13/§3.2): the reference's
   * `processing_jobs` row with per-batch counters becomes one job row +
-  * `observe()` metrics captured by a QueryExecutionListener — counters
+  * `observe()` metrics bound to the job's own `Observation` — counters
   * come from the same pass as the data (no second scan), deterministic
-  * under task retries (unlike accumulators).
+  * under task retries (unlike accumulators), and never taken from another
+  * job's query in the same session.
   */
 object Jobs {
 
@@ -29,37 +31,28 @@ object Jobs {
 
   /** Run one shop job: process → observe counters → sink via `write`.
     * Returns the finalized job row (completeProcessingJob analog,
-    * postgres-adapter.ts:389-425). */
+    * postgres-adapter.ts:389-425). The counters come from the first
+    * action `write` runs over the observed frame; a `write` that runs no
+    * such action fails the job after a 30 s wait. */
   def runShopJob(spark: SparkSession, adapter: Shops.ShopAdapter, raw: DataFrame,
       jobId: String)(write: DataFrame => Unit): JobResult = {
     val started = System.currentTimeMillis()
-    @volatile var metrics: Option[Row] = None
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        qe.observedMetrics.get("run_summary").foreach(r => metrics = Some(r))
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
-      val unified = Sinks.withRunCounters(Pipeline.process(adapter, raw))
-      write(unified)
+      val observation = Observation("run_summary")
+      write(Sinks.withRunCounters(Pipeline.process(adapter, raw), observation))
       // observed metrics are delivered asynchronously after the action
-      val deadline = System.currentTimeMillis() + 30000
-      while (metrics.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      val m = metrics
-      JobResult(jobId, adapter.shopType,
-        status = if (m.isDefined) "completed" else "completed_no_metrics",
-        nRows = m.map(_.getAs[Long]("n_rows")).getOrElse(0L),
-        nPromotions = m.map(_.getAs[Long]("n_promotions")).getOrElse(0L),
-        nInactive = m.map(_.getAs[Long]("n_inactive")).getOrElse(0L),
-        nUncategorized = m.map(_.getAs[Long]("n_uncategorized")).getOrElse(0L),
+      val m = Await.result(observation.future, 30.seconds)
+      JobResult(jobId, adapter.shopType, "completed",
+        nRows = m.getAs[Long]("n_rows"),
+        nPromotions = m.getAs[Long]("n_promotions"),
+        nInactive = m.getAs[Long]("n_inactive"),
+        nUncategorized = m.getAs[Long]("n_uncategorized"),
         startedAtMs = started, finishedAtMs = System.currentTimeMillis())
     } catch {
       case e: Throwable =>
         JobResult(jobId, adapter.shopType, s"failed: ${e.getMessage}",
           0, 0, 0, 0, started, System.currentTimeMillis())
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   /** A10-shaped job stats over a jobs table. */

@@ -100,9 +100,9 @@ object Layout {
     * re-derived range exchanges different child projections, reuse does
     * not fire, and each branch samples its own boundaries — the
     * pid→count map then describes the wrong partitioning and ranks walk
-    * off the end (dev.RankProbe reproduced exactly this: clean
-    * permutation when the frame is only the sort columns, 65/64 shards
-    * in q355 where carry columns prune differently). The lazy
+    * off the end (reproduced on sf0.01 lineitem, local[8], 2026-08-14:
+    * clean permutation when the frame is only the sort columns, 65/64
+    * shards in q355 where carry columns prune differently). The lazy
     * localCheckpoint below IS that pin — one materialized InternalRow
     * RDD that every branch reads — the same object-identity guarantee
     * the previous zipWithIndex spelling relied on, WITHOUT its price:
@@ -143,7 +143,7 @@ object Layout {
     * localCheckpoint so every downstream branch reads ONE pinned
     * partitioning (two branches re-deriving the range exchange each
     * sample their own boundaries and the bucket ids stop agreeing — the
-    * dev.RankProbe failure class). The `_b` column is DATA after this:
+    * [[globalRank]] failure class). The `_b` column is DATA after this:
     * later joins/windows key on it, whatever partitioning they run
     * under. */
   def bucketize(df: DataFrame, parts: Seq[Column],

@@ -96,15 +96,16 @@ object Similarity {
     * only for corpora known to be boilerplate-free.
     *
     * Pure declarative plan since round 7 — no cache, no localCheckpoint.
-    * A/B-measured at sf0.1/local[32] (graft.dev.MaterializationBench):
-    * pure 2.27 s vs cached 2.57 s. Same rationale as
+    * Measured at sf0.1/local[32], 2026-08-14: pure 2.27 s vs cached
+    * 2.57 s. Same rationale as
     * [[minhashDedupPairs]]: native `word_shingles` makes shingle recompute
     * a codegen'd scan pass, AQE reuses the heavy bucket-aggregation
     * exchange across consumers, and neither an exploded-table cache nor a
     * lineage-truncating checkpoint survives 100 TB / executor loss. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
       maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame =
-    ngramJaccardImpl(df, idCol, textCol, n, maxShingleFreq, materialize = false)
+    intersectionPairsFromTokens(shingleTokens(df, idCol, textCol, n),
+      maxShingleFreq)
 
   /** [[ngramJaccardPairs]] with a pair-level sample predicate applied AT
     * CANDIDATE-PAIR STAGE — right after the in-bucket pair emission,
@@ -119,15 +120,8 @@ object Similarity {
   def ngramJaccardPairsSampled(df: DataFrame, idCol: String, textCol: String,
       n: Int, pairFilter: (Column, Column) => Column,
       maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame =
-    ngramJaccardImpl(df, idCol, textCol, n, maxShingleFreq,
-      materialize = false, pairFilter = Some(pairFilter))
-
-  /** Alias kept for plan-shape assertions (historically the no-checkpoint
-    * variant; since round 7 the public entry point IS the pure plan). */
-  private[graft] def ngramJaccardPlan(df: DataFrame, idCol: String,
-      textCol: String, n: Int,
-      maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame =
-    ngramJaccardImpl(df, idCol, textCol, n, maxShingleFreq, materialize = false)
+    intersectionPairsFromTokens(shingleTokens(df, idCol, textCol, n),
+      maxShingleFreq, Some(pairFilter))
 
   /** Directed n-gram containment pairs: (contained, container) where the
     * contained doc's shingle set is ≥ tauNum/tauDen inside the other doc —
@@ -136,23 +130,15 @@ object Similarity {
     * tiny Jaccard but containment ≈ 1). Rides the exact same capped
     * no-self-join candidate plan as [[ngramJaccardPairs]] (and shares its
     * documented boilerplate-only-pair recall caveat); the directed filter
-    * is a pure integer cross-multiply, both directions emitted. */
+    * is a pure integer cross-multiply, both directions emitted. The
+    * union's two branches re-run only the post-exchange assembly joins;
+    * AQE reuses the heavy bucket aggregation exchange. Caching the pair
+    * table instead bought nothing: sf0.1/local[32], 2026-08-16, pure plan
+    * 3.60 s warmed, cached variant no faster. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String, n: Int,
       tauNum: Int = 3, tauDen: Int = 4,
-      maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame =
-    containmentTunable(df, idCol, textCol, n, tauNum, tauDen, maxShingleFreq,
-      materialize = false)
-
-  /** Knob-separated variant for A/B measurement (dev.MaterializationBench);
-    * the public entry point pins the measured winner (pure plan — the
-    * union's two branches re-run only the post-exchange assembly joins,
-    * the heavy bucket aggregation exchange is reused by AQE). */
-  private[graft] def containmentTunable(df: DataFrame, idCol: String,
-      textCol: String, n: Int, tauNum: Int = 3, tauDen: Int = 4,
-      maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq),
-      materialize: Boolean): DataFrame = {
-    val pairs = ngramJaccardImpl(df, idCol, textCol, n, maxShingleFreq,
-      materialize = materialize)
+      maxShingleFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame = {
+    val pairs = ngramJaccardPairs(df, idCol, textCol, n, maxShingleFreq)
     val ab = pairs.filter(col("inter") * tauDen >= col("size_a") * tauNum)
       .select(col("id_a").as("contained_id"), col("id_b").as("container_id"),
         col("inter"), col("size_a").as("contained_size"))
@@ -169,21 +155,19 @@ object Similarity {
     * winnow_fps) over the whole corpus — AQE exchange reuse dedupes
     * shuffles, not scans. The lazy checkpoint holds the COMPACT pre-explode
     * arrays (≈ text-sized, one row per doc); each consumer re-explodes
-    * cheap rows. NOT the `materialize` knob Q162AB rejected — that cached
-    * the EXPLODED row table and the pair table. Per-query-run storage,
-    * released by Bench/Verify with every other checkpoint. */
+    * cheap rows. Unlike the exploded-row and pair-table caches measured
+    * and rejected in rounds 7 and 11, this pins one compact row per doc.
+    * Per-query-run storage, released by Bench/Verify with every other
+    * checkpoint. */
   private def pinnedTokens(df: DataFrame, idCol: String, fps: Column): DataFrame =
     Parallelism.spread(df).select(col(idCol).as("id"), fps.as("_sha"))
       .localCheckpoint(eager = false)
       .select(col("id"), explode(col("_sha")).as("shingle"))
 
-  private def ngramJaccardImpl(df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxShingleFreq: Option[Int], materialize: Boolean,
-      pairFilter: Option[(Column, Column) => Column] = None): DataFrame =
-    intersectionPairsFromTokens(
-      pinnedTokens(df, idCol,
-        call_function("word_shingles", col(textCol), lit(n))),
-      maxShingleFreq, materialize, pairFilter)
+  /** Pinned distinct word n-gram tokens of `textCol`, keyed by `id`. */
+  private def shingleTokens(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    pinnedTokens(df, idCol, call_function("word_shingles", col(textCol), lit(n)))
 
   /** The capped bucket-and-explode pair engine behind [[ngramJaccardPairs]]
     * / [[containmentPairs]] / [[winnowOverlapPairs]], generic over any
@@ -193,16 +177,13 @@ object Similarity {
     * per id for set semantics. Same recall caveat as the callers: pairs
     * sharing ONLY above-cap (boilerplate) tokens are not candidates. */
   private[graft] def intersectionPairsFromTokens(tokens: DataFrame,
-      maxShingleFreq: Option[Int], materialize: Boolean,
+      maxShingleFreq: Option[Int],
       pairFilter: Option[(Column, Column) => Column] = None): DataFrame = {
-    val sh = if (materialize) tokens.cache() else tokens
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_shingles"))
-    // caches created in the capped branch, released after final assembly
-    var branchCaches: List[DataFrame] = Nil
+    val sizes = tokens.groupBy(col("id")).agg(count(lit(1)).as("n_shingles"))
     val pairs = maxShingleFreq match {
       case None =>
         // exact path: one self-join on shingle + pair-count aggregation
-        val joined = sh.as("a").join(sh.as("b"),
+        val joined = tokens.as("a").join(tokens.as("b"),
           col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
         val sampled = pairFilter match {
           case Some(p) => joined.filter(p(col("a.id"), col("b.id")))
@@ -227,10 +208,10 @@ object Similarity {
         // join below (one exchange, two consumers). Semantics unchanged:
         // ≤-cap buckets are complete either way, > cap buckets were
         // dropped either way. CollectLintSpec audits this construction.
-        val hotSet = sh.groupBy(col("shingle"))
+        val hotSet = tokens.groupBy(col("shingle"))
           .agg(count(lit(1)).as("_freq"))
           .filter(col("_freq") > cap).select(col("shingle"))
-        val buckets = sh.join(broadcast(hotSet), Seq("shingle"), "left_anti")
+        val buckets = tokens.join(broadcast(hotSet), Seq("shingle"), "left_anti")
           .groupBy(col("shingle"))
           .agg(sort_array(collect_list(col("id"))).as("ids"))
         val emitted = buckets
@@ -245,12 +226,9 @@ object Similarity {
           case Some(p) => emitted.filter(p(col("p.id_a"), col("p.id_b")))
           case None => emitted
         }
-        val interCapped0 = emittedSampled
+        val interCapped = emittedSampled
           .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
           .agg(count(lit(1)).as("inter_capped"))
-        val interCapped =
-          if (materialize) interCapped0.cache() else interCapped0
-        if (materialize) branchCaches = interCapped :: branchCaches
         // correction: candidates may ALSO share boilerplate (> cap)
         // shingles; add those in via a join bounded by candidates ×
         // hot-shingles-per-doc (the hot shingle SET is tiny even when its
@@ -260,7 +238,7 @@ object Similarity {
         // shuffle (the heaviest stage) a second time just to read sizes —
         // partial counts shuffle a few bytes per shingle instead of the
         // full id lists
-        val shHot = sh.join(broadcast(hotSet), Seq("shingle"))
+        val shHot = tokens.join(broadcast(hotSet), Seq("shingle"))
         val interHot = interCapped.select(col("id_a"), col("id_b"))
           .join(shHot.withColumnRenamed("id", "id_a"), "id_a")
           .join(shHot.withColumnRenamed("id", "id_b"), Seq("id_b", "shingle"))
@@ -271,20 +249,10 @@ object Similarity {
           .select(col("id_a"), col("id_b"),
             (col("inter_capped") + col("inter_hot")).as("inter"))
     }
-    // materialize the (small) pair table eagerly so the shingle/pair caches
-    // can be dropped here instead of leaking for the session's lifetime —
-    // localCheckpoint blocks are GC-cleaned once the result is unreachable,
-    // .cache() blocks are not
-    val assembled = pairs
+    pairs
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "size_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "size_b"), "id_b")
       .withColumn("union_size", col("size_a") + col("size_b") - col("inter"))
-    if (!materialize) assembled
-    else {
-      val out = assembled.localCheckpoint()
-      (sh :: branchCaches).foreach(_.unpersist())
-      out
-    }
   }
 
   /** Winnowing-fingerprint overlap pairs (the MOSS-style local-overlap
@@ -310,7 +278,7 @@ object Similarity {
       maxFpFreq: Option[Int] = Some(DefaultMaxShingleFreq)): DataFrame = {
     val fps = pinnedTokens(docs, idCol,
       call_function("winnow_fps", col(textCol), lit(k), lit(window)))
-    intersectionPairsFromTokens(fps, maxFpFreq, materialize = false)
+    intersectionPairsFromTokens(fps, maxFpFreq)
       .filter(col("inter") >= minShared)
       .select(col("id_a"), col("id_b"), col("inter").as("shared"),
         col("size_a").as("n_fp_a"), col("size_b").as("n_fp_b"),
@@ -375,8 +343,8 @@ object Similarity {
     * verified with exact shingle-set Jaccard ≥ `threshold`.
     *
     * Deliberately a PURE declarative plan — no cache, no localCheckpoint.
-    * A/B-measured at sf0.1/local[32] (graft.dev.MaterializationBench,
-    * median of 3): pure 1.05 s vs shingle-cache + signature-barrier 1.23 s.
+    * Measured at sf0.1/local[32], 2026-08-14 (median of 3): pure 1.05 s vs
+    * shingle-cache + signature-barrier 1.23 s.
     * The round-5 "measured 8×" recompute penalty predates the native
     * `word_shingles` expression (recomputing the shingle explode is now a
     * codegen'd scan pass) and AQE exchange reuse already dedups the
@@ -386,51 +354,18 @@ object Similarity {
     * localCheckpoint truncates lineage so a lost executor kills the job. */
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 1.0): DataFrame =
-    minhashDedupImpl(df, idCol, textCol, n, numHashes, bands, threshold,
-      materialize = false)
-
-  /** Alias kept for plan-shape assertions (historically the no-checkpoint
-    * variant; since round 7 the public entry point IS the pure plan). */
-  private[graft] def minhashDedupPlan(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 1.0): DataFrame =
-    minhashDedupImpl(df, idCol, textCol, n, numHashes, bands, threshold,
-      materialize = false)
-
-  private def minhashDedupImpl(df: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int, bands: Int, threshold: Double,
-      materialize: Boolean): DataFrame =
-    minhashDedupTunable(df, idCol, textCol, n, numHashes, bands, threshold,
-      cacheShingles = materialize, barrierSigs = materialize,
-      materialize = materialize)
-
-  /** Internal knob-separated variant so the two materialization decisions
-    * (shingle cache, signature barrier) can be A/B-measured independently
-    * (dev.MaterializationBench) — the public entry points pin the winning
-    * combination. */
-  private[graft] def minhashDedupTunable(df: DataFrame, idCol: String,
-      textCol: String, n: Int, numHashes: Int, bands: Int, threshold: Double,
-      cacheShingles: Boolean, barrierSigs: Boolean,
-      materialize: Boolean): DataFrame = {
+      threshold: Double = 1.0): DataFrame = {
     // pinned per-doc arrays (see pinnedTokens): sigs/sizes/inter each
     // consume the token frame — un-pinned they re-ran word_shingles 4×
-    val sh0 = pinnedTokens(df, idCol,
-      call_function("word_shingles", col(textCol), lit(n)))
-    val sh = if (cacheShingles) sh0.cache() else sh0
-    // the signature table is one row per DOC (tiny next to the shingle
-    // explode) but feeds a self-join in lshCandidatePairs — without a
-    // materialization barrier both join sides recompute the numHashes-way
-    // min-aggregation over the full shingle table (measured 8× on q27)
-    val sigs0 = minhashSignatures(sh, numHashes)
-    val sigs = if (barrierSigs) sigs0.localCheckpoint() else sigs0
+    val sh = shingleTokens(df, idCol, textCol, n)
+    val sigs = minhashSignatures(sh, numHashes)
     val cands = lshCandidatePairs(sigs, bands, numHashes / bands)
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     val inter = cands
       .join(sh.withColumnRenamed("id", "id_a"), "id_a")
       .join(sh.withColumnRenamed("id", "id_b"), Seq("id_b", "shingle"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    val assembled = cands.join(inter, Seq("id_a", "id_b"), "left")
+    cands.join(inter, Seq("id_a", "id_b"), "left")
       .na.fill(0, Seq("inter"))
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "size_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "size_b"), "id_b")
@@ -439,12 +374,6 @@ object Similarity {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("inter"),
         (col("size_a") + col("size_b") - col("inter")).as("union_size"))
-    if (!materialize) assembled
-    else {
-      val out = assembled.localCheckpoint()
-      if (cacheShingles) sh.unpersist()
-      out
-    }
   }
 
   /** Incremental dedup — flag NEW-batch documents against the EXISTING

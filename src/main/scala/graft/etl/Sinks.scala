@@ -1,7 +1,7 @@
 package graft.etl
 
 import java.sql.Connection
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Sinks (SURVEY.md §2.2 K1–K5).
@@ -44,7 +44,10 @@ object Sinks {
         .sortBy(_.getModificationTime)
       backups.dropRight(keepBackups).foreach(b => fs.delete(b.getPath, true))
     }
-    df.write.format(format).mode(SaveMode.Overwrite).save(dir)
+    // JSON keeps null fields, so every row carries the whole contract
+    // (parquet ignores the option)
+    df.write.format(format).mode(SaveMode.Overwrite)
+      .option("ignoreNullFields", "false").save(dir)
   }
 
   /** K2/K3 — MERGE statement for the staging/processed upserts. Key columns
@@ -190,10 +193,11 @@ object Sinks {
 
   /** A14 — run summary via observe(): counters collected without a second
     * pass over the data (replaces the reference's in-memory job counters).
-    * Returns the observed DataFrame; read the metrics from a
-    * QueryExecutionListener or `observedMetrics` after an action. */
-  def withRunCounters(unified: DataFrame): DataFrame =
-    unified.observe("run_summary",
+    * Returns the observed DataFrame; read the metrics from `observation`
+    * after an action over it. */
+  def withRunCounters(unified: DataFrame,
+      observation: Observation = Observation("run_summary")): DataFrame =
+    unified.observe(observation,
       count(lit(1)).as("n_rows"),
       count(when(col("is_promotion"), 1)).as("n_promotions"),
       count(when(!col("is_active"), 1)).as("n_inactive"),

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and m = 0 score 0, operating on UTF-16 code units (identical to
   * codepoints on the BMP). Two conventions were pinned EMPIRICALLY
   * against the reference float implementations (15k-pair diff run,
-  * dev.JwCompare): the transposition count is FLOORED (t = ⌊ht/2⌋,
+  * 2026-08-14): the transposition count is FLOORED (t = ⌊ht/2⌋,
   * the rapidfuzz/DuckDB rule — the classic half-value variant differs
   * on odd ht), and the prefix-boost threshold is ≥ 0.7, because a
   * float implementation's strict `> 0.7` is noise at the boundary

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.IntegerType
   * propagate NULL through both forms. Idempotent by construction — the
   * output's threshold is `Some`, which the pattern (threshold `None`)
   * no longer matches. Measured **~70×** on a 200k-pair `<= 2` filter
-  * over ~512-char strings (0.2 s vs 13.3 s, `graft.dev.LevBench` — the
+  * over ~512-char strings (0.2 s vs 13.3 s, local[32], 2026-08-14 — the
   * control wraps the distance in `greatest(·, 0)` because Catalyst's own
   * `x + 0 → x` folding would otherwise hand the naive formulation to
   * this rule too); the win scales with string length since the full DP

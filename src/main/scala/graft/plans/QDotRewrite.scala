@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * `ZipWith` are CodegenFallback — every row pays interpreted per-element
   * lambda dispatch plus the materialized intermediate products array — so a
   * user who writes the idiomatic HOF formulation silently gets the tight
-  * generated loop instead (measured ~7× on 2M rows × 64-dim vectors —
-  * `graft.dev.QDotBench`).
+  * generated loop instead (measured ~7× on 2M rows × 64-dim vectors,
+  * local[8], 2026-08-12).
   *
   * Fires only on the exact shape: `array<bigint>` inputs, zero literal 0L,
   * multiply-then-add over the lambda variables, identity finish. Null

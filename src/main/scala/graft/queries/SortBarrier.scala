@@ -7,8 +7,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * decode): a global sort's RangePartitioner runs a sample job that
   * evaluates the ENTIRE child once to pick partition bounds, then the sort
   * evaluates it again — with no intermediate exchange there is nothing for
-  * AQE to reuse, so the whole transform runs twice (AdapterProbe measured
-  * the doubled transform as ~3.3 s of q42's 8.5 s at sf0.1). The lazy
+  * AQE to reuse, so the whole transform runs twice (the doubled
+  * transform measured ~3.3 s of q42's 8.5 s at sf0.1, local[32],
+  * 2026-08-19). The lazy
   * localCheckpoint materializes the rows once; both the sample job and the
   * sort read InternalRows. Queries whose sort already reads a checkpointed
   * iterative result (graph ops) don't need this — their re-evaluation is a

@@ -896,16 +896,16 @@ object TrainingData {
     * — so the pair-count shuffle itself carries only 1/20 of the pairs
     * (a post-hoc filter on the finished pair table cannot be pushed by
     * Catalyst below the Generate that emits them). Same-box A/B
-    * (dev.Q450AB, sf0.1): identical 68227 output rows, pair stage
-    * 2.64 -> 2.52 s — the pushdown is a scale guarantee more than a
+    * (sf0.1, local[32], 2026-08-15): identical 68227 output rows, pair
+    * stage 2.64 -> 2.52 s — the pushdown is a scale guarantee more than a
     * local win, because the query's cost is the 32-perm sha2 signature
-    * stage (~7 s of the budget; dev.SigAB measured the columnar-stack
-    * alternative at only ~6% better — the work IS the engine-neutral
+    * stage (~7 s of the budget; the columnar-stack alternative measured
+    * only ~6% better the same day — the work IS the engine-neutral
     * sha2 hashing, not the row inflation). A pair collides when
     * ALL 4 rows of any band match.
     * Engine-neutral sha-LANE permutations ([[shaLaneSigs]]: 32 perms
-    * from 4 digests, 8 independent 32-bit lanes each — dev.SigAB
-    * measured the sig stage 7.8 → 5.2 s vs one-digest-per-perm),
+    * from 4 digests, 8 independent 32-bit lanes each — sig stage
+    * 7.8 → 5.2 s vs one-digest-per-perm, sf0.1, local[32], 2026-08-15),
     * long-format signatures (same recipe as q442/q472 — the audits
     * share one contract; a sigs-side localCheckpoint was tried and
     * REJECTED: AQE exchange reuse already shares the agg subtree

@@ -53,10 +53,8 @@ class PlanShapeSpec extends SparkSpec {
     // the scale guarantee: pair generation happens INSIDE the bucket
     // aggregate (explode over collect_list), so the only joins are the
     // small candidate/size joins — a shingle-on-shingle self-join would
-    // be the c² skew bomb. Asserted on the plan-only variant: the
-    // production path ends in localCheckpoint (cache hygiene), which
-    // truncates the inspectable plan to an RDD scan.
-    val df = graft.etl.Similarity.ngramJaccardPlan(
+    // be the c² skew bomb.
+    val df = graft.etl.Similarity.ngramJaccardPairs(
       graft.Tables.documents(spark, dir), "doc_id", "text", 3)
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)

@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -26,6 +28,20 @@ class SinksJobsSpec extends SparkSpec {
     assert(r.finishedAtMs >= r.startedAtMs)
   }
 
+  test("runShopJob keeps its own counters when its write runs a nested job") {
+    import spark.implicits._
+    val twoRaw = spark.read.schema(Shops.Jumbo.schema).json(spark.createDataset(
+      Seq(jumboRow, jumboRow.replace("\"123\"", "\"124\""))))
+    var inner: Jobs.JobResult = null
+    val outer = Jobs.runShopJob(spark, Shops.Jumbo, jumboRaw, "outer") { df =>
+      df.count()
+      inner = Jobs.runShopJob(spark, Shops.Jumbo, twoRaw, "inner")(_.count())
+    }
+    assert(inner.status == "completed" && inner.nRows == 2)
+    assert(outer.status == "completed")
+    assert(outer.nRows == 1)
+  }
+
   test("mergeSql generates the reference-shaped MERGE") {
     val sql = Sinks.mergeSql("processed.products", "stage", Seq("shop_type", "external_id"),
       Seq("title", "current_price"))
@@ -44,6 +60,18 @@ class SinksJobsSpec extends SparkSpec {
     assert(spark.read.parquet(dir).select("v").collect().map(_.getString(0)).toSet == Set("c"))
     val parent = new java.io.File(dir).getParentFile
     assert(parent.listFiles().count(_.getName.startsWith("out.bak-")) == 1)
+  }
+
+  test("writeVersioned JSON rows carry every contract field, nulls included") {
+    val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/json"
+    Sinks.writeVersioned(Pipeline.process(Shops.Jumbo, jumboRaw), dir, "json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = spark.read.textFile(dir).collect()
+    assert(lines.nonEmpty)
+    lines.foreach { line =>
+      assert(mapper.readTree(line).fieldNames().asScala.toSeq ==
+        graft.model.UnifiedProduct.requiredFields)
+    }
   }
 
   test("fieldPresenceReport covers all 32 contract fields") {
