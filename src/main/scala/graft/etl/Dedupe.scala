@@ -16,11 +16,12 @@ object Dedupe {
     * The reference's Map keeps the FIRST product on ties/missing scores; a
     * distributed engine has no file order, so callers pass `tiebreak`
     * columns that make the choice deterministic (defaults to the natural
-    * business key columns). */
-  def keepBest(df: DataFrame, tiebreak: Seq[Column] = Seq(col("shop_type"), col("title")))
-      : DataFrame = {
+    * business key columns). `score` ranks by an expression instead, so a
+    * caller that does not keep the score need not add it as a column. */
+  def keepBest(df: DataFrame, tiebreak: Seq[Column] = Seq(col("shop_type"), col("title")),
+      score: Column = col("quality_score")): DataFrame = {
     val w = Window.partitionBy(col("unified_id"))
-      .orderBy(col("quality_score").desc_nulls_last +: tiebreak.map(_.asc): _*)
+      .orderBy(score.desc_nulls_last +: tiebreak.map(_.asc): _*)
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")

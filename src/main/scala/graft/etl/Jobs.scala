@@ -2,6 +2,7 @@ package graft.etl
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,7 +34,8 @@ object Jobs {
     * Returns the finalized job row (completeProcessingJob analog,
     * postgres-adapter.ts:389-425). The counters come from the first
     * action `write` runs over the observed frame; a `write` that runs no
-    * such action fails the job after a 30 s wait. */
+    * such action fails the job after a 30 s wait. A non-fatal error ends
+    * the job as `failed: …`; an interrupt or a fatal VM error propagates. */
   def runShopJob(spark: SparkSession, adapter: Shops.ShopAdapter, raw: DataFrame,
       jobId: String)(write: DataFrame => Unit): JobResult = {
     val started = System.currentTimeMillis()
@@ -49,7 +51,7 @@ object Jobs {
         nUncategorized = m.getAs[Long]("n_uncategorized"),
         startedAtMs = started, finishedAtMs = System.currentTimeMillis())
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         JobResult(jobId, adapter.shopType, s"failed: ${e.getMessage}",
           0, 0, 0, 0, started, System.currentTimeMillis())
     }

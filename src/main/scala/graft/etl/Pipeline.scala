@@ -25,7 +25,13 @@ object Pipeline {
     * line for the K4 error sink. Stateless column expressions, so no
     * cache pinning, and the SPARK-38523 corrupt-column restriction
     * doesn't apply to expression-level from_json; materializing both
-    * halves scans the (cheap, text) source twice. */
+    * halves scans the (cheap, text) source twice.
+    *
+    * The parse sits in a `Generate` (`inline` over the one-struct array),
+    * so each line is parsed once: filters on the parsed columns — the
+    * corrupt check, the adapters' skip and validation rules — stay above
+    * it. Over a plain projection the optimizer would push each filter
+    * beneath it with its own `from_json` copy, one more parse per copy. */
   def readShopJsonLines(spark: SparkSession, adapter: Shops.ShopAdapter,
       path: String): (DataFrame, DataFrame) = {
     val corrupt = "_corrupt_record"
@@ -34,21 +40,17 @@ object Pipeline {
     val parsed = spark.read.text(path)
       .filter(length(trim(col("value"))) > 0)
       .select(col("value").as("raw_record"),
-        from_json(col("value"), schema, opts).as("j"))
-    val good = parsed.filter(col(s"j.$corrupt").isNull)
-      .select(col("j.*")).drop(corrupt)
-    val bad = parsed.filter(col(s"j.$corrupt").isNotNull).select(col("raw_record"))
+        inline(array(from_json(col("value"), schema, opts))))
+    val good = parsed.filter(col(corrupt).isNull).drop(corrupt, "raw_record")
+    val bad = parsed.filter(col(corrupt).isNotNull).select(col("raw_record"))
     (good, bad)
   }
 
-  /** The full transform DAG for one shop's raw DataFrame. */
-  def process(adapter: Shops.ShopAdapter, raw: DataFrame): DataFrame = {
-    val unified = adapter.unified(raw)
-    val derived = CalculateFields(unified)
-    val scored = Quality.withScore(derived)
-    val deduped = Dedupe.keepBest(scored)
-    deduped.drop("quality_score") // base.ts:133 strips quality fields
-  }
+  /** The full transform DAG for one shop's raw DataFrame. The dedup ranks
+    * by the quality score without adding it as a column: base.ts:133 strips
+    * quality fields from the output. */
+  def process(adapter: Shops.ShopAdapter, raw: DataFrame): DataFrame =
+    Dedupe.keepBest(CalculateFields(adapter.unified(raw)), score = Quality.score)
 
   /** All shops → one unioned unified DataFrame (§2.12: unionByName). */
   def processAll(spark: SparkSession, inputs: Map[String, DataFrame]): DataFrame =

@@ -9,10 +9,11 @@ import graft.model.RawSchemas
   *
   * Each adapter exposes `schema` (for `spark.read.schema(...).json`),
   * `skip` (the shop's skip rules as one pushdown-friendly predicate over the
-  * raw columns — filter BEFORE transform, like base.ts:341-357), and
-  * `transform` (raw columns → the 32 unified columns). Everything is column
-  * expressions inside whole-stage codegen except the three UDF islands
-  * (promo parse, unit normalize, AH structured discount).
+  * raw columns — filter BEFORE transform, like base.ts:341-357),
+  * `transformError` (rows the transform rejects) and `unified` (raw
+  * columns → the 32 template-finalized unified columns). Everything is
+  * column expressions inside whole-stage codegen except the UDF islands
+  * (promo parse, unit normalize, category cascade, AH structured discount).
   *
   * Scale note: these are pure per-row map/filter stages — no shuffle, no
   * driver state; they run at scan parallelism on any cluster size.
@@ -38,31 +39,37 @@ object Shops {
   /** Template finalization (T6, unified-product-template.ts:161-231): JS
     * `||` defaults per field group; fixes column order to the 32-field
     * contract. Input must already contain all 32 columns. */
-  def finalizeTemplate(df: DataFrame): DataFrame = {
-    def s(n: String) = coalesce(col(n), lit("")).as(n) // string || ''
-    df.select(
+  def finalizeTemplate(df: DataFrame): DataFrame = df.select(template(col): _*)
+
+  /** The template's 32 columns over `field`, which gives each unified field
+    * by name: a frame's column, or an adapter's expression for it. */
+  private def template(field: String => Column): Seq[Column] = {
+    def s(n: String) = coalesce(field(n), lit("")).as(n) // string || ''
+    def keep(n: String) = field(n).as(n)
+    Seq(
       s("unified_id"), s("shop_type"), s("title"),
-      nullif(coalesce(col("main_category"), lit("")), lit("")).as("main_category"),
+      nullif(coalesce(field("main_category"), lit("")), lit("")).as("main_category"),
       s("brand"), s("image_url"), s("sales_unit_size"),
-      coalesce(col("quantity_amount"), lit(0.0)).as("quantity_amount"),
+      coalesce(field("quantity_amount"), lit(0.0)).as("quantity_amount"),
       s("quantity_unit"),
-      col("default_quantity_amount"), col("default_quantity_unit"),
-      coalesce(col("price_before_bonus"), lit(0.0)).as("price_before_bonus"),
-      coalesce(col("current_price"), lit(0.0)).as("current_price"),
-      col("unit_price"), col("unit_price_unit"),
-      coalesce(col("is_promotion"), lit(false)).as("is_promotion"),
-      coalesce(nullif(col("promotion_type"), lit("")), lit("none")).as("promotion_type"),
-      coalesce(nullif(col("promotion_mechanism"), lit("")), lit("none")).as("promotion_mechanism"),
-      col("promotion_start_date"), col("promotion_end_date"),
-      col("parsed_promotion_effective_unit_price"),
-      col("parsed_promotion_required_quantity"),
-      col("parsed_promotion_total_price"),
-      col("parsed_promotion_is_multi_purchase_required"),
-      col("normalized_quantity_amount"), col("normalized_quantity_unit"),
-      col("conversion_factor"),
-      col("price_per_standard_unit"), col("current_price_per_standard_unit"),
-      col("discount_absolute"), col("discount_percentage"),
-      coalesce(col("is_active"), lit(true)).as("is_active"))
+      keep("default_quantity_amount"), keep("default_quantity_unit"),
+      coalesce(field("price_before_bonus"), lit(0.0)).as("price_before_bonus"),
+      coalesce(field("current_price"), lit(0.0)).as("current_price"),
+      keep("unit_price"), keep("unit_price_unit"),
+      coalesce(field("is_promotion"), lit(false)).as("is_promotion"),
+      coalesce(nullif(field("promotion_type"), lit("")), lit("none")).as("promotion_type"),
+      coalesce(nullif(field("promotion_mechanism"), lit("")), lit("none"))
+        .as("promotion_mechanism"),
+      keep("promotion_start_date"), keep("promotion_end_date"),
+      keep("parsed_promotion_effective_unit_price"),
+      keep("parsed_promotion_required_quantity"),
+      keep("parsed_promotion_total_price"),
+      keep("parsed_promotion_is_multi_purchase_required"),
+      keep("normalized_quantity_amount"), keep("normalized_quantity_unit"),
+      keep("conversion_factor"),
+      keep("price_per_standard_unit"), keep("current_price_per_standard_unit"),
+      keep("discount_absolute"), keep("discount_percentage"),
+      coalesce(field("is_active"), lit(true)).as("is_active"))
   }
 
   trait ShopAdapter {
@@ -70,9 +77,19 @@ object Shops {
     def schema: org.apache.spark.sql.types.StructType
     /** Rows to DROP (skip rules; count them for job stats before filtering). */
     def skip: Column
-    def transform(df: DataFrame): DataFrame
-    /** read → skip-filter → transform → template. */
-    def unified(df: DataFrame): DataFrame = finalizeTemplate(transform(df.filter(!skip)))
+    /** Rows the transform rejects (validation errors thrown per row in the
+      * reference); none by default. */
+    def transformError: Column = lit(false)
+    /** The kept raw rows plus the helper columns `fields` reads: one
+      * projection per UDF island layer (an island and the inputs it reads
+      * never share one), so each island is evaluated once per row. */
+    protected def prepare(df: DataFrame): DataFrame
+    /** The 32 unified fields by name, as expressions over `prepare`'s output. */
+    protected def fields: Map[String, Column]
+    /** read → skip/validation filter → transform → template: one filter,
+      * `prepare`'s projections, one projection for the fields. */
+    def unified(df: DataFrame): DataFrame =
+      prepare(df.filter(!skip && !transformError)).select(template(fields): _*)
   }
 
   /** AH — F1 (ah.ts:672-695) + T1/T8 (ah.ts:146-623). */
@@ -90,7 +107,7 @@ object Shops {
 
     /** Transform-stage validation errors (thrown per-row in the reference →
       * error side-output here, ah.ts:199-262). */
-    val transformError: Column = {
+    override val transformError: Column = {
       val hasStructuredPricing =
         coalesce(col("isBonus"), lit(false)) &&
         exists(coalesce(col("discountLabels"), array()),
@@ -105,81 +122,80 @@ object Shops {
       promoMissingPrice || noValidPrice
     }
 
-    def transform(df: DataFrame): DataFrame = {
-      val pbb = coalesce(col("priceBeforeBonus"), lit(0.0))
-      val isPromo = coalesce(col("isBonus"), lit(false))
-      val sus = coalesce(nullif(col("salesUnitSize"), lit("")), lit("per stuk"))
+    private val pbb = coalesce(col("priceBeforeBonus"), lit(0.0))
+    private val isPromo = coalesce(col("isBonus"), lit(false))
+    private val sus = coalesce(nullif(col("salesUnitSize"), lit("")), lit("per stuk"))
+    private val disc = col("_disc")
+    /** current price: `product.currentPrice || priceBeforeBonus`, or the
+      * structured promo price; non-positive falls back to priceBeforeBonus. */
+    private val cp = {
+      val base = when(coalesce(col("currentPrice"), lit(0.0)) =!= 0.0,
+        col("currentPrice")).otherwise(pbb)
+      val structured = disc("has_structured") && disc("effective_price").isNotNull
+      val cp0 = when(isPromo && structured, disc("effective_price")).otherwise(base)
+      when(cp0 <= 0, pbb).otherwise(cp0)
+    }
 
+    protected def prepare(df: DataFrame): DataFrame =
+      df.select(col("*"),
+          Udfs.ahStructuredDiscount(coalesce(col("discountLabels"), array().cast(
+            RawSchemas.ah("discountLabels").dataType)), pbb, col("currentPrice")).as("_disc"),
+          Udfs.normalizeCategory(
+            col("title"), coalesce(col("mainCategory"), lit("")), lit(shopType)).as("_cat"),
+          qtyUnit(sus).as("_unit"))
+
+    protected def fields: Map[String, Column] = {
+      val unit = col("_unit")
       // widest image (ah.ts:176-179): JS reduce keeps prev only when
       // strictly wider, so on ties the LAST max wins — exactly aggregate().
       val widest = when(size(col("images")) > 0,
         expr("aggregate(slice(images, 2, size(images)), images[0], " +
           "(acc, x) -> if(acc.width > x.width, acc, x)).url")).otherwise(lit(""))
-
       val mech = when(isPromo, coalesce(col("bonusMechanism"), lit(""))).otherwise(lit(""))
-
-      df.filter(!transformError)
-        .withColumn("_disc",
-          Udfs.ahStructuredDiscount(coalesce(col("discountLabels"), array().cast(
-            RawSchemas.ah("discountLabels").dataType)), pbb, col("currentPrice")))
-        .withColumn("_cat", Udfs.normalizeCategory(
-          col("title"), coalesce(col("mainCategory"), lit("")), lit(shopType)))
-        .withColumn("_cp0", {
-          // let currentPrice = product.currentPrice || priceBeforeBonus
-          val base = when(coalesce(col("currentPrice"), lit(0.0)) =!= 0.0,
-            col("currentPrice")).otherwise(pbb)
-          val structured = col("_disc")("has_structured") &&
-            col("_disc")("effective_price").isNotNull
-          when(isPromo && structured, col("_disc")("effective_price"))
-            .otherwise(base)
-        })
-        .withColumn("_cp", when(col("_cp0") <= 0, pbb).otherwise(col("_cp0")))
-        .select(
-          coalesce(col("webshopId").cast("string"), lit("unknown")).as("unified_id"),
-          lit(shopType).as("shop_type"),
-          col("title").as("title"),
-          col("_cat")("category").as("main_category"),
-          coalesce(col("brand"), lit("")).as("brand"),
-          widest.as("image_url"),
-          sus.as("sales_unit_size"),
-          qtyAmount(sus).as("quantity_amount"),
-          qtyUnit(sus).as("quantity_unit"),
-          lit(1.0).as("default_quantity_amount"),
-          qtyUnit(sus).as("default_quantity_unit"),
-          pbb.as("price_before_bonus"),
-          col("_cp").as("current_price"),
-          // U6 (ah.ts:651-668): 'prijs per kg €3.98'
-          when(col("unitPriceDescription").isNotNull,
-            coalesce(regexp_replace(regexp_extract(col("unitPriceDescription"),
-              "(?i)prijs per (\\w+) €(\\d+(?:[.,]\\d+)?)", 2), ",", ".")
-              .cast("double"), lit(0.0))).as("unit_price"),
-          when(col("unitPriceDescription").isNotNull,
-            when(regexp_extract(col("unitPriceDescription"),
-              "(?i)prijs per (\\w+) €(\\d+(?:[.,]\\d+)?)", 1) =!= "",
-              Udfs.normalizeUnit(regexp_extract(col("unitPriceDescription"),
-                "(?i)prijs per (\\w+) €(\\d+(?:[.,]\\d+)?)", 1)))
-              .otherwise(lit(""))).as("unit_price_unit"),
-          isPromo.as("is_promotion"),
+      // U6 (ah.ts:651-668): 'prijs per kg €3.98'
+      val unitPriceRe = "(?i)prijs per (\\w+) €(\\d+(?:[.,]\\d+)?)"
+      val upd = col("unitPriceDescription")
+      Map(
+        "unified_id" -> coalesce(col("webshopId").cast("string"), lit("unknown")),
+        "shop_type" -> lit(shopType),
+        "title" -> col("title"),
+        "main_category" -> col("_cat")("category"),
+        "brand" -> coalesce(col("brand"), lit("")),
+        "image_url" -> widest,
+        "sales_unit_size" -> sus,
+        "quantity_amount" -> qtyAmount(sus),
+        "quantity_unit" -> unit,
+        "default_quantity_amount" -> lit(1.0),
+        "default_quantity_unit" -> unit,
+        "price_before_bonus" -> pbb,
+        "current_price" -> cp,
+        "unit_price" -> when(upd.isNotNull,
+          coalesce(regexp_replace(regexp_extract(upd, unitPriceRe, 2), ",", ".")
+            .cast("double"), lit(0.0))),
+        "unit_price_unit" -> when(upd.isNotNull,
+          when(regexp_extract(upd, unitPriceRe, 1) =!= "",
+            Udfs.normalizeUnit(regexp_extract(upd, unitPriceRe, 1)))
+            .otherwise(lit(""))),
+        "is_promotion" -> isPromo,
+        "promotion_type" ->
           when(isPromo, coalesce(nullif(col("promotionType"), lit("")), lit("DISCOUNT")))
-            .otherwise(lit("")).as("promotion_type"),
-          mech.as("promotion_mechanism"),
-          when(isPromo, col("bonusStartDate")).as("promotion_start_date"),
-          when(isPromo, col("bonusEndDate")).as("promotion_end_date"),
-          when(isPromo, col("_cp")).as("parsed_promotion_effective_unit_price"),
-          col("_disc")("required_quantity").as("parsed_promotion_required_quantity"),
-          col("_disc")("total_price").as("parsed_promotion_total_price"),
-          coalesce(col("_disc")("is_multi_purchase_required"), lit(false))
-            .as("parsed_promotion_is_multi_purchase_required"),
-          qtyAmount(sus).as("normalized_quantity_amount"),
-          qtyUnit(sus).as("normalized_quantity_unit"),
-          lit(1.0).as("conversion_factor"),
-          lit(null).cast("double").as("price_per_standard_unit"),
-          lit(null).cast("double").as("current_price_per_standard_unit"),
-          when(isPromo && pbb > 0 && col("_cp") < pbb, pbb - col("_cp"))
-            .as("discount_absolute"),
-          when(isPromo && pbb > 0 && col("_cp") < pbb,
-            (pbb - col("_cp")) / pbb * 100).as("discount_percentage"),
-          (col("orderAvailabilityStatus") === "IN_ASSORTMENT").as("is_active"))
+            .otherwise(lit("")),
+        "promotion_mechanism" -> mech,
+        "promotion_start_date" -> when(isPromo, col("bonusStartDate")),
+        "promotion_end_date" -> when(isPromo, col("bonusEndDate")),
+        "parsed_promotion_effective_unit_price" -> when(isPromo, cp),
+        "parsed_promotion_required_quantity" -> disc("required_quantity"),
+        "parsed_promotion_total_price" -> disc("total_price"),
+        "parsed_promotion_is_multi_purchase_required" ->
+          coalesce(disc("is_multi_purchase_required"), lit(false)),
+        "normalized_quantity_amount" -> qtyAmount(sus),
+        "normalized_quantity_unit" -> unit,
+        "conversion_factor" -> lit(1.0),
+        "price_per_standard_unit" -> lit(null).cast("double"),
+        "current_price_per_standard_unit" -> lit(null).cast("double"),
+        "discount_absolute" -> when(isPromo && pbb > 0 && cp < pbb, pbb - cp),
+        "discount_percentage" -> when(isPromo && pbb > 0 && cp < pbb, (pbb - cp) / pbb * 100),
+        "is_active" -> (col("orderAvailabilityStatus") === "IN_ASSORTMENT"))
     }
   }
 
@@ -197,9 +213,20 @@ object Shops {
       p("inAssortment") <=> false ||
       (p("availability").isNotNull && p("availability")("isAvailable") <=> false)
 
-    def transform(df: DataFrame): DataFrame = {
-      val pbb = coalesce(p("prices")("price"), lit(0L)) / 100.0
-      val mech = when(p("promotions").isNotNull && size(p("promotions")) > 0,
+    private val pbb = coalesce(p("prices")("price"), lit(0L)) / 100.0
+    private val qtySrc = orElse(p("quantity"), p("subtitle"))
+    private val mech = col("_mech")
+    private val parsed = col("_parsed")
+    private val cp = {
+      val fromParse = when(mech =!= "" &&
+          coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
+        parsed("effective_unit_price")).otherwise(pbb)
+      when(coalesce(p("prices")("promoPrice"), lit(0L)) > 0,
+        p("prices")("promoPrice") / 100.0).otherwise(fromParse)
+    }
+
+    protected def prepare(df: DataFrame): DataFrame = {
+      val promoTags = when(p("promotions").isNotNull && size(p("promotions")) > 0,
         array_join(flatten(transform_(p("promotions"),
           pr => coalesce(transform_(coalesce(pr("tags"),
             array().cast(org.apache.spark.sql.types.ArrayType(
@@ -207,73 +234,58 @@ object Shops {
                 org.apache.spark.sql.types.StructField("text",
                   org.apache.spark.sql.types.StringType)))))),
             t => t("text")), array()))), "; ")).otherwise(lit(""))
+      df.select(col("*"), promoTags.as("_mech"),
+          Udfs.normalizeCategory(
+            p("title"), coalesce(p("category"), lit("")), lit(shopType)).as("_cat"),
+          when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk")).as("_unit"))
+        .select(col("*"),
+          when(mech =!= "", Udfs.parsePromo(mech, pbb, pbb)).as("_parsed"))
+    }
 
-      val qtySrc = orElse(p("quantity"), p("subtitle"))
-
-      df.withColumn("_mech", mech)
-        .withColumn("_parsed",
-          when(col("_mech") =!= "", Udfs.parsePromo(col("_mech"), pbb, pbb)))
-        .withColumn("_cp0", {
-          val fromParse = when(col("_mech") =!= "" &&
-              coalesce(col("_parsed")("effective_unit_price"), lit(0.0)) =!= 0.0,
-            col("_parsed")("effective_unit_price")).otherwise(pbb)
-          when(coalesce(p("prices")("promoPrice"), lit(0L)) > 0,
-            p("prices")("promoPrice") / 100.0).otherwise(fromParse)
-        })
-        .withColumn("_cat", Udfs.normalizeCategory(
-          p("title"), coalesce(p("category"), lit("")), lit(shopType)))
-        .select(
-          coalesce(p("id"), lit("unknown")).as("unified_id"),
-          lit(shopType).as("shop_type"),
-          p("title").as("title"),
-          col("_cat")("category").as("main_category"),
-          orElse(p("brand"), element_at(split(p("title"), " "), 1), lit(""))
-            .as("brand"),
-          coalesce(p("image"), lit("")).as("image_url"),
-          coalesce(qtySrc, lit("per stuk")).as("sales_unit_size"),
-          when(qtySrc.isNotNull, qtyAmount(qtySrc)).otherwise(lit(1.0))
-            .as("quantity_amount"),
-          when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk"))
-            .as("quantity_unit"),
-          coalesce(p("quantityDetails")("defaultAmount").cast("double"), lit(1.0))
-            .as("default_quantity_amount"),
-          when(p("quantityDetails").isNotNull, lit("stuk"))
-            .otherwise(when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk")))
-            .as("default_quantity_unit"),
-          pbb.as("price_before_bonus"),
-          col("_cp0").as("current_price"),
-          when(p("prices")("pricePerUnit").isNotNull,
-            p("prices")("pricePerUnit")("price") / 100.0).as("unit_price"),
-          when(p("prices")("pricePerUnit").isNotNull,
-            Udfs.normalizeUnit(coalesce(p("prices")("pricePerUnit")("unit"), lit(""))))
-            .as("unit_price_unit"),
-          (p("promotions").isNotNull && size(p("promotions")) > 0).as("is_promotion"),
-          when(col("_mech") =!= "",
-            when(col("_mech").contains("%"), lit("DISCOUNT_PERCENTAGE"))
-              .otherwise(lit("DISCOUNT_AMOUNT"))).otherwise(lit("")).as("promotion_type"),
-          col("_mech").as("promotion_mechanism"),
-          lit(null).cast("string").as("promotion_start_date"),
-          lit(null).cast("string").as("promotion_end_date"),
-          when(col("_cp0") < pbb, col("_cp0")).as("parsed_promotion_effective_unit_price"),
-          when(col("_mech") =!= "", col("_parsed")("required_quantity"))
-            .as("parsed_promotion_required_quantity"),
-          when(col("_mech") =!= "", col("_parsed")("total_promotion_price"))
-            .as("parsed_promotion_total_price"),
-          coalesce(when(col("_mech") =!= "",
-            coalesce(col("_parsed")("is_multi_purchase_required"), lit(false))),
-            lit(false)).as("parsed_promotion_is_multi_purchase_required"),
-          when(qtySrc.isNotNull, qtyAmount(qtySrc)).otherwise(lit(1.0))
-            .as("normalized_quantity_amount"),
-          when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk"))
-            .as("normalized_quantity_unit"),
-          lit(1.0).as("conversion_factor"),
-          lit(null).cast("double").as("price_per_standard_unit"),
-          lit(null).cast("double").as("current_price_per_standard_unit"),
-          when(col("_cp0") < pbb && pbb > 0, pbb - col("_cp0")).as("discount_absolute"),
-          when(col("_cp0") < pbb && pbb > 0, (pbb - col("_cp0")) / pbb * 100)
-            .as("discount_percentage"),
-          (!(p("availability")("isAvailable") === false) &&
-            !(p("inAssortment") === false)).as("is_active"))
+    protected def fields: Map[String, Column] = {
+      val qtyAmt = when(qtySrc.isNotNull, qtyAmount(qtySrc)).otherwise(lit(1.0))
+      val qtyU = col("_unit")
+      Map(
+        "unified_id" -> coalesce(p("id"), lit("unknown")),
+        "shop_type" -> lit(shopType),
+        "title" -> p("title"),
+        "main_category" -> col("_cat")("category"),
+        "brand" -> orElse(p("brand"), element_at(split(p("title"), " "), 1), lit("")),
+        "image_url" -> coalesce(p("image"), lit("")),
+        "sales_unit_size" -> coalesce(qtySrc, lit("per stuk")),
+        "quantity_amount" -> qtyAmt,
+        "quantity_unit" -> qtyU,
+        "default_quantity_amount" ->
+          coalesce(p("quantityDetails")("defaultAmount").cast("double"), lit(1.0)),
+        "default_quantity_unit" ->
+          when(p("quantityDetails").isNotNull, lit("stuk")).otherwise(qtyU),
+        "price_before_bonus" -> pbb,
+        "current_price" -> cp,
+        "unit_price" -> when(p("prices")("pricePerUnit").isNotNull,
+          p("prices")("pricePerUnit")("price") / 100.0),
+        "unit_price_unit" -> when(p("prices")("pricePerUnit").isNotNull,
+          Udfs.normalizeUnit(coalesce(p("prices")("pricePerUnit")("unit"), lit("")))),
+        "is_promotion" -> (p("promotions").isNotNull && size(p("promotions")) > 0),
+        "promotion_type" -> when(mech =!= "",
+          when(mech.contains("%"), lit("DISCOUNT_PERCENTAGE"))
+            .otherwise(lit("DISCOUNT_AMOUNT"))).otherwise(lit("")),
+        "promotion_mechanism" -> mech,
+        "promotion_start_date" -> lit(null).cast("string"),
+        "promotion_end_date" -> lit(null).cast("string"),
+        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
+        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
+        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
+        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
+          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
+        "normalized_quantity_amount" -> qtyAmt,
+        "normalized_quantity_unit" -> qtyU,
+        "conversion_factor" -> lit(1.0),
+        "price_per_standard_unit" -> lit(null).cast("double"),
+        "current_price_per_standard_unit" -> lit(null).cast("double"),
+        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
+        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
+        "is_active" -> (!(p("availability")("isAvailable") === false) &&
+          !(p("inAssortment") === false)))
     }
 
     // avoid clash with this file's DataFrame import of functions.transform
@@ -293,7 +305,16 @@ object Shops {
       coalesce(col("isSoldOut"), lit(false)) ||
       col("mainCategory") <=> "cadeaukaarten"
 
-    def transform(df: DataFrame): DataFrame = {
+    private val mech = col("_mech")
+    private val pbb = col("_pbb")
+    private val parsed = col("_parsed")
+    private val cp =
+      when(mech =!= "" && coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
+        parsed("effective_unit_price")).otherwise(pbb)
+    private val isPromo = col("_isPromo")
+    private val start = col("_start")
+
+    protected def prepare(df: DataFrame): DataFrame = {
       // parsePrice (aldi.ts:325-337): price → priceFormatted stripped → 0.01
       val priceParsed = coalesce(
         when(col("price").cast("double") > 0, col("price").cast("double")),
@@ -303,24 +324,16 @@ object Shops {
             ",", ".").cast("double")),
         lit(0.01))
       val oldP = col("oldPrice").cast("double")
-      val pbb = when(col("oldPrice").isNotNull, oldP).otherwise(priceParsed)
 
       // determinePromotions (aldi.ts:339-385)
       val pctOff = round((oldP - priceParsed) / oldP * 100).cast("int")
-      val isPromo =
+      val promo =
         when(col("oldPrice").isNotNull && col("oldPrice") =!= col("price"), lit(true))
         .when(coalesce(trim(col("priceReduction")), lit("")) =!= "", lit(true))
         .when(coalesce(trim(col("priceInfo")), lit("")) =!= "", lit(true))
         .when(col("mainCategory") === "discount", lit(true))
         .otherwise(lit(false))
-      val promoType =
-        when(col("oldPrice").isNotNull && col("oldPrice") =!= col("price"),
-          lit("PRICE_REDUCTION"))
-        .when(coalesce(trim(col("priceReduction")), lit("")) =!= "", lit("PRICE_REDUCTION"))
-        .when(coalesce(trim(col("priceInfo")), lit("")) =!= "", lit("PRICE_INFO"))
-        .when(col("mainCategory") === "discount", lit("WEEKLY_OFFER"))
-        .otherwise(lit(""))
-      val mech =
+      val promoMech =
         when(col("oldPrice").isNotNull && col("oldPrice") =!= col("price"),
           when(oldP > 0 && priceParsed > 0 && oldP > priceParsed,
             concat(lit("-"), pctOff.cast("string"), lit("%")))
@@ -337,9 +350,12 @@ object Shops {
           .when(rawDate.cast("long") > 0,
             date_format(timestamp_millis(rawDate.cast("long")), "yyyy-MM-dd"))
 
-      val monday = now.`with`(DayOfWeek.MONDAY)
-      val weekStart = lit(monday.toString)
-      val weekEnd = lit(monday.plusDays(6).toString)
+      val initialCat = orElse(col("mainCategory"),
+        when(col("articleId").isNotNull && size(split(col("articleId"), "/")) > 1,
+          array_join(slice(split(col("articleId"), "/"), lit(1),
+            size(split(col("articleId"), "/")) - 1), "/"))
+          .otherwise(lit("Uncategorized")),
+        lit("Uncategorized"))
 
       // quantity (aldi.ts:296-323)
       val suMatch = regexp_extract(col("salesUnit"), "(\\d+(?:[.,]\\d+)?)\\s*(\\w+\\.?)", 0)
@@ -359,79 +375,73 @@ object Shops {
         .when(sdValue =!= "" && size(sdParts) >= 2, element_at(sdParts, 2))
       val qUnit = when(qUnitRaw.isNotNull, Udfs.normalizeUnit(qUnitRaw)).otherwise(lit("stuk"))
 
-      val initialCat = orElse(col("mainCategory"),
-        when(col("articleId").isNotNull && size(split(col("articleId"), "/")) > 1,
-          array_join(slice(split(col("articleId"), "/"), lit(1),
-            size(split(col("articleId"), "/")) - 1), "/"))
-          .otherwise(lit("Uncategorized")),
-        lit("Uncategorized"))
+      df.select(col("*"), promoMech.as("_mech"),
+          when(col("oldPrice").isNotNull, oldP).otherwise(priceParsed).as("_pbb"),
+          promo.as("_isPromo"), startParsed.as("_start"),
+          Udfs.normalizeCategory(col("title"), initialCat, lit(shopType)).as("_cat"),
+          qAmt.as("_qty"), qUnit.as("_unit"))
+        .select(col("*"), when(mech =!= "", Udfs.parsePromo(mech, pbb, pbb)).as("_parsed"))
+    }
 
-      df.withColumn("_mech", mech)
-        .withColumn("_pbb", pbb)
-        .withColumn("_price", priceParsed)
-        .withColumn("_parsed",
-          when(col("_mech") =!= "", Udfs.parsePromo(col("_mech"), col("_pbb"), col("_pbb"))))
-        .withColumn("_cp",
-          when(col("_mech") =!= "" &&
-              coalesce(col("_parsed")("effective_unit_price"), lit(0.0)) =!= 0.0,
-            col("_parsed")("effective_unit_price")).otherwise(col("_pbb")))
-        .withColumn("_isPromo", isPromo)
-        .withColumn("_start", startParsed)
-        .withColumn("_cat", Udfs.normalizeCategory(col("title"), initialCat, lit(shopType)))
-        .select(
-          coalesce(col("articleNumber"), lit("unknown")).as("unified_id"),
-          lit(shopType).as("shop_type"),
-          col("title").as("title"),
-          col("_cat")("category").as("main_category"),
-          coalesce(trim(col("brandName")), lit("")).as("brand"),
-          coalesce(col("primaryImage")("baseUrl"), lit("")).as("image_url"),
-          coalesce(nullif(col("salesUnit"), lit("")),
-            concat(qAmt.cast("string"), lit(" "), qUnit)).as("sales_unit_size"),
-          qAmt.as("quantity_amount"),
-          qUnit.as("quantity_unit"),
-          lit(1.0).as("default_quantity_amount"),
-          qUnit.as("default_quantity_unit"),
-          col("_pbb").as("price_before_bonus"),
-          col("_cp").as("current_price"),
-          when(col("basePriceValue").isNotNull && col("basePriceValue") =!= 0.0 &&
-            coalesce(col("basePriceFormatted"), lit("")) =!= "", col("basePriceValue"))
-            .as("unit_price"),
-          when(col("basePriceValue").isNotNull && col("basePriceValue") =!= 0.0 &&
-            coalesce(col("basePriceFormatted"), lit("")) =!= "" &&
-            regexp_extract(col("basePriceFormatted"), "/([a-zA-Z]+)", 1) =!= "",
-            Udfs.normalizeUnit(regexp_extract(col("basePriceFormatted"),
-              "/([a-zA-Z]+)", 1))).as("unit_price_unit"),
-          col("_isPromo").as("is_promotion"),
-          promoType.as("promotion_type"),
-          col("_mech").as("promotion_mechanism"),
-          coalesce(col("_start"),
-            when(col("_isPromo") || col("mainCategory") === "discount", weekStart))
-            .as("promotion_start_date"),
-          when(col("_start").isNull &&
-            (col("_isPromo") || col("mainCategory") === "discount"), weekEnd)
-            .as("promotion_end_date"),
-          when(col("_cp") < col("_pbb"), col("_cp"))
-            .as("parsed_promotion_effective_unit_price"),
-          when(col("_mech") =!= "", col("_parsed")("required_quantity"))
-            .as("parsed_promotion_required_quantity"),
-          when(col("_mech") =!= "", col("_parsed")("total_promotion_price"))
-            .as("parsed_promotion_total_price"),
-          coalesce(when(col("_mech") =!= "",
-            coalesce(col("_parsed")("is_multi_purchase_required"), lit(false))),
-            lit(false)).as("parsed_promotion_is_multi_purchase_required"),
-          qAmt.as("normalized_quantity_amount"),
-          qUnit.as("normalized_quantity_unit"),
-          lit(1.0).as("conversion_factor"),
-          lit(null).cast("double").as("price_per_standard_unit"),
-          lit(null).cast("double").as("current_price_per_standard_unit"),
-          when(col("_cp") < col("_pbb") && col("_pbb") > 0, col("_pbb") - col("_cp"))
-            .as("discount_absolute"),
-          when(col("_cp") < col("_pbb") && col("_pbb") > 0,
-            (col("_pbb") - col("_cp")) / col("_pbb") * 100).as("discount_percentage"),
-          (!coalesce(col("isNotAvailable"), lit(false)) &&
-            !coalesce(col("isSoldOut"), lit(false))).as("is_active"))
+    protected def fields: Map[String, Column] = {
+      val promoType =
+        when(col("oldPrice").isNotNull && col("oldPrice") =!= col("price"),
+          lit("PRICE_REDUCTION"))
+        .when(coalesce(trim(col("priceReduction")), lit("")) =!= "", lit("PRICE_REDUCTION"))
+        .when(coalesce(trim(col("priceInfo")), lit("")) =!= "", lit("PRICE_INFO"))
+        .when(col("mainCategory") === "discount", lit("WEEKLY_OFFER"))
+        .otherwise(lit(""))
+
+      val monday = now.`with`(DayOfWeek.MONDAY)
+      val weekStart = lit(monday.toString)
+      val weekEnd = lit(monday.plusDays(6).toString)
+      val qAmt = col("_qty")
+      val qUnit = col("_unit")
+
+      val hasBasePrice = col("basePriceValue").isNotNull && col("basePriceValue") =!= 0.0 &&
+        coalesce(col("basePriceFormatted"), lit("")) =!= ""
+      val weekly = isPromo || col("mainCategory") === "discount"
+      Map(
+        "unified_id" -> coalesce(col("articleNumber"), lit("unknown")),
+        "shop_type" -> lit(shopType),
+        "title" -> col("title"),
+        "main_category" -> col("_cat")("category"),
+        "brand" -> coalesce(trim(col("brandName")), lit("")),
+        "image_url" -> coalesce(col("primaryImage")("baseUrl"), lit("")),
+        "sales_unit_size" -> coalesce(nullif(col("salesUnit"), lit("")),
+          concat(qAmt.cast("string"), lit(" "), qUnit)),
+        "quantity_amount" -> qAmt,
+        "quantity_unit" -> qUnit,
+        "default_quantity_amount" -> lit(1.0),
+        "default_quantity_unit" -> qUnit,
+        "price_before_bonus" -> pbb,
+        "current_price" -> cp,
+        "unit_price" -> when(hasBasePrice, col("basePriceValue")),
+        "unit_price_unit" ->
+          when(hasBasePrice && regexp_extract(col("basePriceFormatted"), "/([a-zA-Z]+)", 1) =!= "",
+            Udfs.normalizeUnit(regexp_extract(col("basePriceFormatted"), "/([a-zA-Z]+)", 1))),
+        "is_promotion" -> isPromo,
+        "promotion_type" -> promoType,
+        "promotion_mechanism" -> mech,
+        "promotion_start_date" -> coalesce(start, when(weekly, weekStart)),
+        "promotion_end_date" -> when(start.isNull && weekly, weekEnd),
+        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
+        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
+        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
+        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
+          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
+        "normalized_quantity_amount" -> qAmt,
+        "normalized_quantity_unit" -> qUnit,
+        "conversion_factor" -> lit(1.0),
+        "price_per_standard_unit" -> lit(null).cast("double"),
+        "current_price_per_standard_unit" -> lit(null).cast("double"),
+        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
+        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
+        "is_active" -> (!coalesce(col("isNotAvailable"), lit(false)) &&
+          !coalesce(col("isSoldOut"), lit(false))))
     }
   }
+
   /** Fresh adapter per access: the ISO-week promotion window derives from
     * `now`, so a long-running driver must not pin the class-load date (the
     * reference computes the current week per run). Callers needing a fixed
@@ -452,19 +462,29 @@ object Shops {
       p.isNull || !coalesce(p("IsAvailable"), lit(false))
 
     /** Required-field check (plus.ts:269-289) → error side-output. */
-    val transformError: Column =
+    override val transformError: Column =
       p("SKU").isNull || coalesce(p("SKU"), lit("")) === "" ||
       p("Name").isNull || coalesce(p("Name"), lit("")) === "" ||
       p("OriginalPrice").isNull || coalesce(p("OriginalPrice"), lit("")) === "" ||
       p("Categories").isNull
 
-    def transform(df: DataFrame): DataFrame = {
-      val pbb = coalesce(p("OriginalPrice").cast("double"), lit(0.0))
+    private val rawPbb = coalesce(p("OriginalPrice").cast("double"), lit(0.0))
+    private val isPromo = p("PromotionLabel").isNotNull &&
+      (p("PromotionStartDate").isNull || p("PromotionStartDate") =!= "1900-01-01") &&
+      (p("PromotionEndDate").isNull || p("PromotionEndDate") =!= "1900-01-01")
+    private val mech = col("_mech")
+    private val pbb = col("_pbb")
+    private val parsed = col("_parsed")
+    private val cp =
+      when(mech =!= "" && coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
+        parsed("effective_unit_price")).otherwise(col("_icp"))
+
+    protected def prepare(df: DataFrame): DataFrame = {
       val newP = p("NewPrice").cast("double")
       val initialCp0 =
-        when(p("NewPrice").isNotNull && newP.isNotNull && newP > 0, newP).otherwise(pbb)
-      val initialCp = when(initialCp0 === 0 && pbb > 0, pbb).otherwise(initialCp0)
-
+        when(p("NewPrice").isNotNull && newP.isNotNull && newP > 0, newP).otherwise(rawPbb)
+      val initialCp = when(initialCp0 === 0 && rawPbb > 0, rawPbb).otherwise(initialCp0)
+      val initialCat = p("Categories")("List").getItem(0)("Name")
       // quantity cascade (plus.ts:291-340)
       val subAmtRaw = regexp_extract(p("Product_Subtitle"),
         "(?i)Per\\s+(\\d+(?:[.,]\\d+)?)\\s*(\\w+)", 1)
@@ -485,79 +505,64 @@ object Shops {
         .when(p("Packging").isNotNull, Udfs.normalizeUnit(p("Packging")))
         .otherwise(lit("stuk"))
 
+      df.select(col("*"),
+          when(isPromo, coalesce(p("PromotionLabel"), lit(""))).otherwise(lit("")).as("_mech"),
+          rawPbb.as("_pbb"), initialCp.as("_icp"),
+          when(initialCat.isNotNull,
+            Udfs.normalizeCategory(p("Name"), initialCat, lit(shopType))("category")).as("_cat"),
+          qAmt.as("_qty"), qUnit.as("_unit"))
+        .select(col("*"),
+          when(mech =!= "", Udfs.parsePromo(mech, pbb, col("_icp"))).as("_parsed"))
+    }
+
+    protected def fields: Map[String, Column] = {
+      val qAmt = col("_qty")
+      val qUnit = col("_unit")
       // calculateUnitPrice (plus.ts:342-384) on the NORMALIZED unit
       val upRaw =
-        when(qUnit === "g", pbb / qAmt * 1000)
-        .when(qUnit === "ml", pbb / qAmt * 1000)
-        .otherwise(pbb / qAmt)
+        when(qUnit === "g", rawPbb / qAmt * 1000)
+        .when(qUnit === "ml", rawPbb / qAmt * 1000)
+        .otherwise(rawPbb / qAmt)
       val upUnit =
         when(qUnit === "g", lit("kg")).when(qUnit === "ml", lit("l")).otherwise(qUnit)
-      val upValid = pbb > 0 && qAmt > 0 && !(qAmt === 1 && qUnit === "stuk")
+      val upValid = rawPbb > 0 && qAmt > 0 && !(qAmt === 1 && qUnit === "stuk")
 
-      val isPromo = p("PromotionLabel").isNotNull &&
-        (p("PromotionStartDate").isNull || p("PromotionStartDate") =!= "1900-01-01") &&
-        (p("PromotionEndDate").isNull || p("PromotionEndDate") =!= "1900-01-01")
-      val mech = when(isPromo, coalesce(p("PromotionLabel"), lit(""))).otherwise(lit(""))
-
-      val initialCat = p("Categories")("List").getItem(0)("Name")
-
-      df.filter(!transformError)
-        .withColumn("_mech", mech)
-        .withColumn("_pbb", pbb)
-        .withColumn("_icp", initialCp)
-        .withColumn("_parsed",
-          when(col("_mech") =!= "",
-            Udfs.parsePromo(col("_mech"), col("_pbb"), col("_icp"))))
-        .withColumn("_cp",
-          when(col("_mech") =!= "" &&
-              coalesce(col("_parsed")("effective_unit_price"), lit(0.0)) =!= 0.0,
-            col("_parsed")("effective_unit_price")).otherwise(col("_icp")))
-        .withColumn("_cat",
-          when(initialCat.isNotNull,
-            Udfs.normalizeCategory(p("Name"), initialCat, lit(shopType))("category")))
-        .select(
-          p("SKU").as("unified_id"),
-          lit(shopType).as("shop_type"),
-          p("Name").as("title"),
-          col("_cat").as("main_category"),
-          orElse(p("Brand"), element_at(split(p("Name"), " "), 1)).as("brand"),
-          coalesce(p("ImageURL"), lit("")).as("image_url"),
-          when(coalesce(trim(p("Product_Subtitle")), lit("")) =!= "",
-            regexp_replace(p("Product_Subtitle"), "(?i)^Per\\s+", ""))
-            .otherwise(concat(qAmt.cast("string"), lit(" "), qUnit))
-            .as("sales_unit_size"),
-          qAmt.as("quantity_amount"),
-          qUnit.as("quantity_unit"),
-          lit(1.0).as("default_quantity_amount"),
-          qUnit.as("default_quantity_unit"),
-          col("_pbb").as("price_before_bonus"),
-          col("_cp").as("current_price"),
-          when(upValid, round(upRaw, 2)).as("unit_price"),
-          when(upValid, upUnit).as("unit_price_unit"),
-          isPromo.as("is_promotion"),
-          when(isPromo, lit("DISCOUNT")).otherwise(lit("")).as("promotion_type"),
-          col("_mech").as("promotion_mechanism"),
-          when(isPromo, p("PromotionStartDate")).as("promotion_start_date"),
-          when(isPromo, p("PromotionEndDate")).as("promotion_end_date"),
-          when(col("_cp") < col("_pbb"), col("_cp"))
-            .as("parsed_promotion_effective_unit_price"),
-          when(col("_mech") =!= "", col("_parsed")("required_quantity"))
-            .as("parsed_promotion_required_quantity"),
-          when(col("_mech") =!= "", col("_parsed")("total_promotion_price"))
-            .as("parsed_promotion_total_price"),
-          coalesce(when(col("_mech") =!= "",
-            coalesce(col("_parsed")("is_multi_purchase_required"), lit(false))),
-            lit(false)).as("parsed_promotion_is_multi_purchase_required"),
-          qAmt.as("normalized_quantity_amount"),
-          qUnit.as("normalized_quantity_unit"),
-          lit(1.0).as("conversion_factor"),
-          lit(null).cast("double").as("price_per_standard_unit"),
-          lit(null).cast("double").as("current_price_per_standard_unit"),
-          when(col("_cp") < col("_pbb") && col("_pbb") > 0, col("_pbb") - col("_cp"))
-            .as("discount_absolute"),
-          when(col("_cp") < col("_pbb") && col("_pbb") > 0,
-            (col("_pbb") - col("_cp")) / col("_pbb") * 100).as("discount_percentage"),
-          p("IsAvailable").as("is_active"))
+      Map(
+        "unified_id" -> p("SKU"),
+        "shop_type" -> lit(shopType),
+        "title" -> p("Name"),
+        "main_category" -> col("_cat"),
+        "brand" -> orElse(p("Brand"), element_at(split(p("Name"), " "), 1)),
+        "image_url" -> coalesce(p("ImageURL"), lit("")),
+        "sales_unit_size" -> when(coalesce(trim(p("Product_Subtitle")), lit("")) =!= "",
+          regexp_replace(p("Product_Subtitle"), "(?i)^Per\\s+", ""))
+          .otherwise(concat(qAmt.cast("string"), lit(" "), qUnit)),
+        "quantity_amount" -> qAmt,
+        "quantity_unit" -> qUnit,
+        "default_quantity_amount" -> lit(1.0),
+        "default_quantity_unit" -> qUnit,
+        "price_before_bonus" -> pbb,
+        "current_price" -> cp,
+        "unit_price" -> when(upValid, round(upRaw, 2)),
+        "unit_price_unit" -> when(upValid, upUnit),
+        "is_promotion" -> isPromo,
+        "promotion_type" -> when(isPromo, lit("DISCOUNT")).otherwise(lit("")),
+        "promotion_mechanism" -> mech,
+        "promotion_start_date" -> when(isPromo, p("PromotionStartDate")),
+        "promotion_end_date" -> when(isPromo, p("PromotionEndDate")),
+        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
+        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
+        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
+        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
+          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
+        "normalized_quantity_amount" -> qAmt,
+        "normalized_quantity_unit" -> qUnit,
+        "conversion_factor" -> lit(1.0),
+        "price_per_standard_unit" -> lit(null).cast("double"),
+        "current_price_per_standard_unit" -> lit(null).cast("double"),
+        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
+        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
+        "is_active" -> p("IsAvailable"))
     }
   }
 

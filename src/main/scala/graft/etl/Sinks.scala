@@ -1,6 +1,8 @@
 package graft.etl
 
 import java.sql.Connection
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -81,15 +83,20 @@ object Sinks {
     val staging = target.replace('.', '_') + "_stage" + stagingSuffix
     batch.write.mode(SaveMode.Overwrite).jdbc(jdbcUrl, staging, props)
     val updateCols = batch.columns.filterNot(keyCols.contains).toSeq
-    val conn = connect(jdbcUrl)
-    try {
+    Using.resource(connect(jdbcUrl)) { conn =>
       conn.setAutoCommit(false)
-      val st = conn.createStatement()
       try {
-        st.execute(mergeSql(target, staging, keyCols, updateCols, nowExpr))
+        Using.resource(conn.createStatement())(
+          _.execute(mergeSql(target, staging, keyCols, updateCols, nowExpr)))
         conn.commit()
-      } finally st.close()
-    } finally conn.close()
+      } catch {
+        case e: Throwable =>
+          // roll back before the close: closing a connection mid-transaction
+          // throws, and that error would replace the MERGE's own
+          try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+          throw e
+      }
+    }
   }
 
   /** Storage layout for the processed table (SURVEY.md §4: the reference's

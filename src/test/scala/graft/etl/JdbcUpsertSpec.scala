@@ -44,4 +44,30 @@ class JdbcUpsertSpec extends SparkSpec {
     conn2.close()
     assert(rows == List(("1", "New Title", 1.25), ("2", "Brand New", 2.5)))
   }
+
+  test("a failed MERGE rolls back and surfaces its own error") {
+    import spark.implicits._
+    val conn = DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    st.execute("""CREATE TABLE narrow ("k" VARCHAR(8) NOT NULL PRIMARY KEY,
+      "title" VARCHAR(4), "updated_at" TIMESTAMP)""")
+    st.execute("""INSERT INTO narrow VALUES ('1', 'abc', CURRENT_TIMESTAMP)""")
+    st.close(); conn.close()
+
+    // the staged title fits its staging column but not the target's
+    val props = new java.util.Properties()
+    props.setProperty("createTableColumnTypes", "k VARCHAR(8), title VARCHAR(64)")
+    val batch = Seq(("1", "far too long"), ("2", "new")).toDF("k", "title")
+    val e = intercept[java.sql.SQLException](Sinks.jdbcUpsert(batch, url, props, "narrow",
+      Seq("k"), nowExpr = "CURRENT_TIMESTAMP"))
+    assert(e.getSQLState == "22001", e.toString) // string truncation, not a close error
+
+    val conn2 = DriverManager.getConnection(url)
+    val rs = conn2.createStatement()
+      .executeQuery("""SELECT "k", "title" FROM narrow ORDER BY "k"""")
+    val rows = Iterator.continually(rs)
+      .takeWhile(_.next()).map(r => (r.getString(1), r.getString(2))).toList
+    conn2.close()
+    assert(rows == List(("1", "abc")))
+  }
 }

@@ -42,6 +42,16 @@ class SinksJobsSpec extends SparkSpec {
     assert(outer.nRows == 1)
   }
 
+  test("runShopJob lets an interrupt propagate instead of recording a failed job") {
+    intercept[InterruptedException] {
+      Jobs.runShopJob(spark, Shops.Jumbo, jumboRaw, "interrupted")(_ =>
+        throw new InterruptedException("stop"))
+    }
+    val failed = Jobs.runShopJob(spark, Shops.Jumbo, jumboRaw, "failed")(_ =>
+      throw new IllegalStateException("sink down"))
+    assert(failed.status == "failed: sink down")
+  }
+
   test("mergeSql generates the reference-shaped MERGE") {
     val sql = Sinks.mergeSql("processed.products", "stage", Seq("shop_type", "external_id"),
       Seq("title", "current_price"))
