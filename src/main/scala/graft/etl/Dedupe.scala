@@ -12,16 +12,17 @@ import org.apache.spark.sql.functions._
   */
 object Dedupe {
 
-  /** A1 (dedupe.ts:23-52): keep the highest `quality_score` per unified_id.
+  /** A1 (dedupe.ts:23-52): keep the highest quality score per unified_id.
     * The reference's Map keeps the FIRST product on ties/missing scores; a
     * distributed engine has no file order, so callers pass `tiebreak`
     * columns that make the choice deterministic (defaults to the natural
-    * business key columns). `score` ranks by an expression instead, so a
-    * caller that does not keep the score need not add it as a column. */
-  def keepBest(df: DataFrame, tiebreak: Seq[Column] = Seq(col("shop_type"), col("title")),
-      score: Column = col("quality_score")): DataFrame = {
+    * business key columns). Ranks by the [[Quality.score]] expression, so
+    * the input need not carry a `quality_score` column (base.ts:133 strips
+    * it from the output). */
+  def keepBest(df: DataFrame, tiebreak: Seq[Column] = Seq(col("shop_type"), col("title")))
+      : DataFrame = {
     val w = Window.partitionBy(col("unified_id"))
-      .orderBy(score.desc_nulls_last +: tiebreak.map(_.asc): _*)
+      .orderBy(Quality.score.desc_nulls_last +: tiebreak.map(_.asc): _*)
     df.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")

@@ -46,11 +46,9 @@ object Pipeline {
     (good, bad)
   }
 
-  /** The full transform DAG for one shop's raw DataFrame. The dedup ranks
-    * by the quality score without adding it as a column: base.ts:133 strips
-    * quality fields from the output. */
+  /** The full transform DAG for one shop's raw DataFrame. */
   def process(adapter: Shops.ShopAdapter, raw: DataFrame): DataFrame =
-    Dedupe.keepBest(CalculateFields(adapter.unified(raw)), score = Quality.score)
+    Dedupe.keepBest(CalculateFields(adapter.unified(raw)))
 
   /** All shops → one unioned unified DataFrame (§2.12: unionByName). */
   def processAll(spark: SparkSession, inputs: Map[String, DataFrame]): DataFrame =
