@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line.
   *
@@ -111,16 +109,6 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
-  /** Drop every storage block the finished query left behind. Persistent
-    * RDDs cover both .cache() and localCheckpoint() (localCheckpoint
-    * persists its RDD); unpersisting a checkpointed RDD is safe here
-    * because the owning DataFrame reference is already out of scope. */
-  private def releaseStorage(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -163,11 +151,11 @@ object Bench {
             (System.nanoTime() - t0) / 1e9
           }
           try { once(); () } catch { case _: Throwable => }
-          releaseStorage(spark)
+          Sessions.releaseStorage(spark)
           val t = try {
-            val a = once(); releaseStorage(spark); math.min(a, once())
+            val a = once(); Sessions.releaseStorage(spark); math.min(a, once())
           } catch { case _: Throwable => -1.0 }
-          releaseStorage(spark)
+          Sessions.releaseStorage(spark)
           name -> t
         }
       }
@@ -221,7 +209,7 @@ object Bench {
       def runFully(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count() }
       if (headline.contains(name) || results.isEmpty) {
         try runFully() catch { case _: Throwable => }
-        releaseStorage(spark)
+        Sessions.releaseStorage(spark)
       }
       def timedShot(): Double = {
         val t0 = System.nanoTime()
@@ -233,13 +221,13 @@ object Bench {
       val first = timedShot()
       val elapsed =
         if (floors.get(name).exists(shouldRetry(first, _, boxFactor))) {
-          releaseStorage(spark)
+          Sessions.releaseStorage(spark)
           val second = timedShot()
           retries += ((name, (first, second)))
           foldRetry(first, second)
         } else first
       results += name -> elapsed
-      releaseStorage(spark)
+      Sessions.releaseStorage(spark)
       done += 1
       if (done % 8 == 0) System.gc()
       writeFull(results.toSeq)

@@ -32,6 +32,16 @@ object Sessions {
     spark
   }
 
+  /** Drop every storage block the finished query left behind. Persistent
+    * RDDs cover both .cache() and localCheckpoint() (localCheckpoint
+    * persists its RDD); unpersisting a checkpointed RDD is safe here
+    * because the owning DataFrame reference is already out of scope. */
+  def releaseStorage(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   /** Silence the per-plan `WindowExec: No Partition Defined` WARN in the
     * long-running driver-contract mains (Bench/Verify). Every unpartitioned
     * window in the engine is an allowlisted bounded-input global window —

@@ -30,12 +30,10 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         // same storage hygiene as Bench: queries cache/localCheckpoint
-        // internally (adapters' evalOnce, the pair engine's pinned token
+        // internally (sort barriers, the pair engine's pinned token
         // arrays, iterative graph rounds); across 523 queries in one JVM
         // the blocks otherwise accumulate for the session's lifetime
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Sessions.releaseStorage(spark)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

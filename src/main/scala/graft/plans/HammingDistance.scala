@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: Hamming distance between two strings
@@ -13,7 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * via doGenCode, so the SimHash near-dup filter stays inside the generated
   * loop instead of crossing a UDF boundary per row-pair.
   *
-  * One of the engine's four custom `Expression`s (see [[QDot]], [[LongestRun]], [[Simhash]]) — everything
+  * One of the engine's 17 native expressions, all registered as SQL
+  * functions by [[GraftExtensions]] — everything
   * else in the SURVEY.md §2 inventory maps to built-ins (§7.3), and this
   * exists because the hamming filter sits in the hottest inner join of the
   * SimHash dedup path where rows × candidate-pairs can be billions at 100 TB.
@@ -62,212 +61,4 @@ case class HammingDistance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Engine extensions: registers `hamming(a, b)`, `qdot(a, b)`,
-  * `longest_run(arr)`, `simhash(text)` and `hilbert(x, y, order)` in the
-  * function registry. Wired via
-  * `spark.sql.extensions=graft.plans.GraftExtensions`
-  * ([[graft.Sessions.builder]]); callable from SQL and `call_function`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("hamming"),
-      new ExpressionInfo(classOf[HammingDistance].getName, "hamming"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "hamming(a, b) takes exactly 2 arguments")
-        HammingDistance(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("qdot"),
-      new ExpressionInfo(classOf[QDot].getName, "qdot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "qdot(a, b) takes exactly 2 arguments")
-        QDot(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("longest_run"),
-      new ExpressionInfo(classOf[LongestRun].getName, "longest_run"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "longest_run(arr) takes exactly 1 argument")
-        LongestRun(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("damerau_levenshtein"),
-      new ExpressionInfo(classOf[DamerauLevenshtein].getName,
-        "damerau_levenshtein"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "damerau_levenshtein(a, b) takes exactly 2 arguments")
-        DamerauLevenshtein(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "jaro_winkler(a, b) takes exactly 2 arguments")
-        JaroWinkler(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(classOf[Simhash].getName, "simhash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash(text) takes exactly 1 argument")
-        Simhash(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hilbert"),
-      new ExpressionInfo(classOf[HilbertIndex].getName, "hilbert"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "hilbert(x, y, order) takes exactly 3 arguments")
-        val order = children(2) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"hilbert order must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "hilbert order must be a literal")
-        }
-        HilbertIndex(children.head, children(1), order)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "word_shingles(text, n) takes exactly 2 arguments")
-        val n = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"word_shingles n must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "word_shingles n must be a literal")
-        }
-        WordShingles(children.head, n)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "word_ngrams(text, n) takes exactly 2 arguments")
-        val n = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"word_ngrams n must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "word_ngrams n must be a literal")
-        }
-        WordNgrams(children.head, n)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sha_lanes"),
-      new ExpressionInfo(classOf[ShaLanes].getName, "sha_lanes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          "sha_lanes(s) takes exactly 1 argument")
-        ShaLanes(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sp_tokens"),
-      new ExpressionInfo(classOf[SpTokens].getName, "sp_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "sp_tokens(text) takes exactly 1 argument")
-        SpTokens(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("lang_hits"),
-      new ExpressionInfo(classOf[LangHits].getName, "lang_hits"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "lang_hits(text) takes exactly 1 argument")
-        LangHits(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("distinct_ngrams"),
-      new ExpressionInfo(classOf[DistinctNgrams].getName, "distinct_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "distinct_ngrams(text, n) takes exactly 2 arguments")
-        val n = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"distinct_ngrams n must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "distinct_ngrams n must be a literal")
-        }
-        DistinctNgrams(children.head, n)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[Winnow].getName, "winnow_fps"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "winnow_fps(text, k, window) takes exactly 3 arguments")
-        def intLit(e: Expression, name: String): Int = e match {
-          case l if l.foldable => l.eval() match {
-            case i: Int => i
-            case lo: Long => lo.toInt
-            case other => throw new IllegalArgumentException(
-              s"winnow_fps $name must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"winnow_fps $name must be a literal")
-        }
-        Winnow(children.head, intLit(children(1), "k"),
-          intLit(children(2), "window"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ws_tokens"),
-      new ExpressionInfo(classOf[WsTokens].getName, "ws_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "ws_tokens(text) takes exactly 1 argument")
-        WsTokens(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hll_regs"),
-      new ExpressionInfo(classOf[HllRegsAgg].getName, "hll_regs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "hll_regs(key, p) takes exactly 2 arguments")
-        val p = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case l: Long => l.toInt
-            case other => throw new IllegalArgumentException(
-              s"hll_regs p must be an integer literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "hll_regs p must be a literal")
-        }
-        HllRegsAgg(Cast(children.head, LongType), p)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bitlen"),
-      new ExpressionInfo(classOf[BitLen].getName, "bitlen"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "bitlen(x) takes exactly 1 argument")
-        BitLen(Cast(children.head, LongType))
-      }))
-    // HOF dot-product pattern → QDot (see QDotRewrite Scaladoc)
-    ext.injectOptimizerRule(_ => QDotRewrite)
-    // length(bin(x)) → BitLen (see BitLenRewrite Scaladoc)
-    ext.injectOptimizerRule(_ => BitLenRewrite)
-    // bounded levenshtein comparisons → built-in threshold form
-    ext.injectOptimizerRule(_ => LevThresholdRewrite)
-    // filter(split(s, ' '), t -> t <> '') → SpTokens (see its Scaladoc)
-    ext.injectOptimizerRule(_ => SpTokensRewrite)
-  }
 }

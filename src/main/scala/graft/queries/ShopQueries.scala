@@ -45,26 +45,25 @@ object ShopQueries {
   private[queries] def dec(c: Column): Column =
     format_string("%d.%02d", (c / 100).cast("long"), (c % 100).cast("long"))
 
-  /** Evaluate the synthesized-JSON parse exactly once. Without this barrier
-    * the optimizer collapses the adapter's ~35 output expressions onto the
-    * from_json lineage and, JsonToStructs being codegen-fallback (no
-    * subexpression elimination), re-builds and re-parses the JSON per output
-    * column — measured 8s vs 0.6s at sf0.1. An RDD boundary is the one
-    * barrier projection collapse cannot cross (it crosses repartition()).
-    * Real pipelines read raw JSON from files and never hit this: the scan is
-    * already a materialization point. Lazy localCheckpoint keeps the rows in
-    * InternalRow form (no Row-encoder roundtrip) and computes on first
-    * action. */
-  private def evalOnce(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
-
-  /** [[graft.etl.Parallelism.spread]] on the raw scan BELOW the JSON
-    * synthesis + parse: the sf-scale fixtures are single-row-group
-    * parquet, so un-spread the whole parse+transform pipeline ran in ONE
-    * task regardless of core count. */
-  private def spread(df: DataFrame): DataFrame =
-    graft.etl.Parallelism.spread(df)
-
+  /** The adapter's unified output over the orders scan, with the
+    * synthesized `json` parsed into the adapter's raw columns.
+    *
+    * The parse sits in a `Generate` (`inline(array(from_json(..)))`, the
+    * spelling of [[graft.etl.Pipeline.readShopJsonLines]]): projection
+    * collapse and filter pushdown cannot copy it across, so each row parses
+    * once. A plain `select(from_json(..))` lets the optimizer collapse the
+    * adapter's ~35 output expressions onto the from_json lineage and,
+    * JsonToStructs being codegen-fallback (no subexpression elimination),
+    * re-parse the JSON per output column — measured 8s vs 0.6s at sf0.1.
+    *
+    * [[graft.etl.Parallelism.spread]] runs on the raw scan BELOW the parse:
+    * the sf-scale fixtures are single-row-group parquet, so un-spread the
+    * whole parse+transform pipeline ran in ONE task regardless of core
+    * count. */
+  private def unified(spark: SparkSession, dir: String,
+      adapter: Shops.ShopAdapter, json: Column): DataFrame =
+    adapter.unified(graft.etl.Parallelism.spread(Tables.orders(spark, dir))
+      .select(inline(array(from_json(json, adapter.schema)))))
 
   private def centsOut(c: Column): Column = round(c * 100).cast("long")
 
@@ -107,9 +106,7 @@ object ShopQueries {
         "{\"code\":\"DISCOUNT_MYSTERY\"}," +
         "{\"code\":\"DISCOUNT_AMOUNT\",\"amount\":0.5}]")).otherwise(lit("")),
       lit("}"))
-    val raw = evalOnce(spread(Tables.orders(spark, dir))
-      .select(from_json(json, Shops.Ah.schema).as("j")).select($"j.*"))
-    Shops.Ah.unified(raw).select(
+    unified(spark, dir, Shops.Ah, json).select(
       $"unified_id", $"title", $"main_category", $"brand", $"image_url",
       $"sales_unit_size", $"quantity_amount", $"quantity_unit",
       centsOut($"price_before_bonus").as("pbb_cents"),
@@ -157,9 +154,7 @@ object ShopQueries {
         when(k === 7, lit(",\"promotions\":[{\"tags\":[{\"text\":\"25% korting\"}]}]"))
           .otherwise(lit("")),
         lit("}}")))
-    val raw = evalOnce(spread(Tables.orders(spark, dir))
-      .select(from_json(json, Shops.Jumbo.schema).as("j")).select($"j.*"))
-    Shops.Jumbo.unified(raw).select(
+    unified(spark, dir, Shops.Jumbo, json).select(
       $"unified_id", $"title", $"main_category", $"brand",
       $"sales_unit_size", $"quantity_amount", $"quantity_unit",
       $"default_quantity_amount", $"default_quantity_unit",
@@ -208,11 +203,9 @@ object ShopQueries {
         lit(",\"promotionDetails\":{\"promotionDate\":\"2024-03-04\"}"))
         .otherwise(lit("")),
       lit(",\"primaryImage\":{\"baseUrl\":\"img.jpg\"}}"))
-    val raw = evalOnce(spread(Tables.orders(spark, dir))
-      .select(from_json(json, Shops.Aldi.schema).as("j")).select($"j.*"))
     // main_category is intentionally not emitted: the k=6 'discount' class
     // feeds the cascade an input whose result q22 does not pin by hand.
-    Shops.Aldi.unified(raw).select(
+    unified(spark, dir, Shops.Aldi, json).select(
       $"unified_id", $"title", $"brand", $"image_url",
       $"sales_unit_size", $"quantity_amount", $"quantity_unit",
       centsOut($"price_before_bonus").as("pbb_cents"),
@@ -256,9 +249,7 @@ object ShopQueries {
           "\"PromotionStartDate\":\"1900-01-01\",\"PromotionEndDate\":\"2024-01-07\""))
           .otherwise(lit("")),
         lit(",\"Categories\":{\"List\":[{\"Name\":\"Bakkerij\"}]}}}")))
-    val raw = evalOnce(spread(Tables.orders(spark, dir))
-      .select(from_json(json, Shops.Plus.schema).as("j")).select($"j.*"))
-    Shops.Plus.unified(raw).select(
+    unified(spark, dir, Shops.Plus, json).select(
       $"unified_id", $"title", $"main_category", $"brand", $"image_url",
       $"sales_unit_size", $"quantity_amount", $"quantity_unit",
       centsOut($"price_before_bonus").as("pbb_cents"),

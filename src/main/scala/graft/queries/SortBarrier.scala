@@ -20,15 +20,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * after every query).
   */
 object SortBarrier {
-  /** Plan-shape tests flip this off to see THROUGH the barrier: the lazy
-    * localCheckpoint plans as an opaque LogicalRDD, so scan-shape
-    * assertions (ReadSchema, pushed filters) on the pre-barrier pipeline
-    * need the un-barriered plan. Never set outside tests. */
-  @volatile var disabled: Boolean = false
-
   implicit class SortedOnce(private val df: DataFrame) extends AnyVal {
     def sortedOnce(keys: Column*): DataFrame =
-      if (disabled) df.orderBy(keys: _*)
-      else df.localCheckpoint(eager = false).orderBy(keys: _*)
+      df.localCheckpoint(eager = false).orderBy(keys: _*)
   }
 }

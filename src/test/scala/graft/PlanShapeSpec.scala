@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 
 /** Plan-shape regression tests: the scale properties the engine promises
@@ -14,6 +21,30 @@ class PlanShapeSpec extends SparkSpec {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
+  }
+
+  /** The query executions of the barriers (lazy `localCheckpoint`s) that
+    * building query `name` creates. Creating one runs Spark's
+    * `localCheckpoint` action at once, which reports the barrier's child
+    * plan to the session's execution listeners. Listeners hear events in
+    * order, so the marker action's event comes after every barrier's. */
+  private def barriers(name: String): Seq[QueryExecution] = {
+    val marker = spark.range(1)
+    val done = Promise[Unit]()
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe eq marker.queryExecution) done.trySuccess(())
+        else if (f == "localCheckpoint") seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, dir)
+      marker.collect()
+      Await.result(done.future, 30.seconds)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
   }
 
   test("q2: predicates and projection pushed into the parquet scan") {
@@ -449,19 +480,32 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q343: markup density is scan-only — the lone Exchange is the output sort") {
-    // the pre-sort barrier (SortBarrier.sortedOnce) plans as an opaque
-    // LogicalRDD that hides the scan; assert the underlying shape with
-    // the barrier off, then that the default plan still has no extra
-    // shuffle above the barrier
-    graft.queries.SortBarrier.disabled = true
-    val p = try plan("q343_markup_density")
-    finally graft.queries.SortBarrier.disabled = false
-    // exactly one Exchange, and it is the rangepartitioning of the
-    // query's deterministic orderBy, not an aggregation shuffle
-    assert("Exchange".r.findAllIn(p).size <= 2, "operator must not shuffle")
+    // the sort barrier (SortBarrier.sortedOnce) plans as an opaque RDD scan
+    // that hides the scan; assert the shape of the barrier's child, then
+    // that the query adds no shuffle above the barrier but the sort's
+    val Seq(child) = barriers("q343_markup_density")
+      .map(_.explainString(FormattedMode))
+    assert(!child.contains("Exchange"), "operator must not shuffle")
+    assert(!child.contains("HashAggregate"))
+    assert(child.contains("ReadSchema") && child.contains("text"))
+    val p = plan("q343_markup_density")
+    // exactly one Exchange (named twice in FormattedMode), and it is the
+    // rangepartitioning of the query's deterministic orderBy
+    assert("Exchange".r.findAllIn(p).size <= 2)
     assert(p.contains("rangepartitioning"))
     assert(!p.contains("HashAggregate"))
-    assert(p.contains("ReadSchema") && p.contains("text"))
+  }
+
+  Seq("q40_ah_adapter", "q41_jumbo_adapter", "q42_aldi_adapter",
+      "q43_plus_adapter").foreach { q =>
+    test(s"$q: the sort's barrier is the only one, over one JSON parse") {
+      val bs = barriers(q)
+      assert(bs.size == 1, s"${bs.size} barriers")
+      val parses = bs.head.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+      }.sum
+      assert(parses == 1, s"$parses JsonToStructs under the barrier")
+    }
   }
 
   test("q344: the band plan is data-free — a Range, no file scan") {

@@ -12,12 +12,7 @@ object QueryBench {
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Sessions.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
+    def release(): Unit = { Sessions.releaseStorage(spark); System.gc() }
     val fn = SparkEntry.queries(name)
     // toRdd.count(), matching Bench's timing exactly (df.count() lets
     // Catalyst prune unevaluated output columns — isolation minima would
