@@ -4,6 +4,9 @@ engine itself is pure Scala/Spark).
 
 Usage: python3 dev/check_oracle.py <sfDir> <verifyOutDir>
 
+Exits 1 when a query fails, and also when the oracle json names no query:
+a run that compared nothing proves nothing.
+
 Reads each <verifyOutDir>/<name>/ parquet (Spark result) and runs
 <verifyOutDir>/oracle_sql.json[name] in DuckDB against the parquet tables
 in <sfDir>, then compares: column-name sets, row counts, and PANDAS-LEVEL
@@ -72,11 +75,14 @@ def canon(df):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        print(f"FAIL: {out_dir}/oracle_sql.json names no query; nothing compared")
+        sys.exit(1)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(oracle):
         sql = oracle[name]

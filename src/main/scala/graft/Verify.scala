@@ -6,12 +6,23 @@ import java.nio.file.{Files, Paths}
   *
   * Optional third arg `q1,q2` restricts the dump (and the emitted oracle
   * json) to named queries — dev-loop convenience; the driver always runs
-  * the full surface. */
+  * the full surface. A name that matches no query fails the run before
+  * anything is written, so a misspelt subset cannot pass vacuously. */
 object Verify {
+  /** The query names of a `q1,q2` subset argument; fails listing every
+    * name that matches no query. */
+  def subsetOf(arg: String): Set[String] = {
+    val names = arg.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(names.nonEmpty, s"empty query subset '$arg'")
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, subset) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q.split(",").map(_.trim).toSet))
+      case Array(s, o, q) => (s, o, Some(subsetOf(q)))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()

@@ -1,7 +1,11 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.AnalyzedFrames
+import org.apache.spark.sql.types.StructType
 
 /** The end-to-end per-shop dataflow (SURVEY.md §3.1):
   * read → skip-filter → transform → calculateFields → quality → dedup →
@@ -38,7 +42,7 @@ object Pipeline {
     val schema = adapter.schema.add(corrupt, org.apache.spark.sql.types.StringType)
     val opts = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt)
     val parsed = spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
+      .filter(trim(col("value")) =!= "")
       .select(col("value").as("raw_record"),
         inline(array(from_json(col("value"), schema, opts))))
     val good = parsed.filter(col(corrupt).isNull).drop(corrupt, "raw_record")
@@ -46,9 +50,61 @@ object Pipeline {
     (good, bad)
   }
 
-  /** The full transform DAG for one shop's raw DataFrame. */
-  def process(adapter: Shops.ShopAdapter, raw: DataFrame): DataFrame =
-    Dedupe.keepBest(CalculateFields(adapter.unified(raw)))
+  /** The full transform DAG for one shop's raw DataFrame.
+    *
+    * Its analysis depends on the adapter, the input's schema and the
+    * session's SQL conf, not on the job. So the DAG is analysed once per
+    * session and key, over a placeholder relation of the input's schema
+    * (a [[Template]]), and every call, the first one included, swaps the
+    * placeholder for the job's own analysed input plan: the analyzer never
+    * walks the pipeline's steps again. The result equals a fresh analysis
+    * up to generated names and ids. Batch input only, as the dedup window
+    * requires. */
+  def process(adapter: Shops.ShopAdapter, raw: DataFrame): DataFrame = {
+    require(!raw.isStreaming,
+      "Pipeline.process needs a batch input: the keep-best dedup window does not run on a stream")
+    val input = raw.queryExecution.analyzed
+    AnalyzedFrames(raw.sparkSession, Templates(raw.sparkSession, adapter, input.schema).bind(input))
+  }
+
+  /** `process`'s DAG over `placeholder`, analysed. */
+  private final case class Template(placeholder: LocalRelation, analyzed: LogicalPlan) {
+    /** The analysed DAG over `input`, which has the placeholder's schema. No
+      * node is added: the placeholder is replaced and the attributes above
+      * it are renumbered to the input's. */
+    def bind(input: LogicalPlan): LogicalPlan = analyzed.transformUpWithNewOutput {
+      case r: LocalRelation if r.output.map(_.exprId) == placeholder.output.map(_.exprId) =>
+        (input, r.output.zip(input.output))
+    }
+  }
+
+  /** Templates per session (weakly held, so a stopped session is not kept
+    * alive; a template holds no session), each session's an LRU of at most
+    * `perSession` entries keyed by adapter, input schema and SQL conf, so a
+    * conf change never meets a stale plan. Two threads missing the same key
+    * at once both build it; the first one stored wins. */
+  private object Templates {
+    private val perSession = 32
+    private type Key = (Shops.ShopAdapter, StructType, Map[String, String])
+    private val sessions =
+      new java.util.WeakHashMap[SparkSession, java.util.LinkedHashMap[Key, Template]]
+
+    private def lru(spark: SparkSession) = sessions.computeIfAbsent(spark, _ =>
+      new java.util.LinkedHashMap[Key, Template](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[Key, Template]): Boolean =
+          size() > perSession
+      })
+
+    def apply(spark: SparkSession, adapter: Shops.ShopAdapter, schema: StructType): Template = {
+      val key = (adapter, schema, spark.conf.getAll)
+      Option(sessions.synchronized(lru(spark).get(key))).getOrElse {
+        val placeholder = LocalRelation(DataTypeUtils.toAttributes(schema))
+        val dag = Dedupe.keepBest(CalculateFields(adapter.unified(AnalyzedFrames(spark, placeholder))))
+        val built = Template(placeholder, dag.queryExecution.analyzed)
+        sessions.synchronized(Option(lru(spark).putIfAbsent(key, built)).getOrElse(built))
+      }
+    }
+  }
 
   /** All shops → one unioned unified DataFrame (§2.12: unionByName). */
   def processAll(spark: SparkSession, inputs: Map[String, DataFrame]): DataFrame =

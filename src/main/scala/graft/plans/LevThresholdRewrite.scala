@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Levenshtein, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.BINARY_COMPARISON
 import org.apache.spark.sql.types.IntegerType
 
 /** Optimizer rule: route bounded Levenshtein comparisons onto the
@@ -36,7 +37,7 @@ object LevThresholdRewrite extends Rule[LogicalPlan] {
     GreaterThanOrEqual(Levenshtein(a, b, Some(Literal(k))), Literal(0))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(BINARY_COMPARISON)) {
       case LessThanOrEqual(Levenshtein(a, b, None), Literal(k: Int, IntegerType))
           if k >= 0 => bounded(a, b, k)
       case GreaterThanOrEqual(Literal(k: Int, IntegerType), Levenshtein(a, b, None))

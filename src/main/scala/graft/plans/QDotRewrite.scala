@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Expression, LambdaFunction, Literal, Multiply, NamedLambdaVariable, ZipWith}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Optimizer rule: rewrite the higher-order-function dot-product pattern
@@ -28,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
 object QDotRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) {
       case agg @ ArrayAggregate(
             ZipWith(left, right, LambdaFunction(mul: Multiply, zipArgs, _)),
             Literal(0L, LongType),

@@ -74,10 +74,11 @@ object SpTokensRewrite
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
   import org.apache.spark.sql.types.IntegerType
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) {
       case f @ ArrayFilter(
             StringSplit(text, Literal(sep, StringType), limit),
             LambdaFunction(pred, Seq(arg), _))

@@ -59,4 +59,13 @@ class SparkEntrySpec extends AnyFunSuite {
       assert(re.matches(k), s"bad query name: $k")
     }
   }
+
+  test("Verify's subset argument fails on a name that matches no query, listing each") {
+    assert(Verify.subsetOf("q40_ah_adapter, q48_generic_lineage") ==
+      Set("q40_ah_adapter", "q48_generic_lineage"))
+    val e = intercept[IllegalArgumentException](
+      Verify.subsetOf("q40_ah_adapter,q40_ah_adaptr,q99_nope"))
+    assert(e.getMessage.contains("unknown query names: q40_ah_adaptr, q99_nope"), e.getMessage)
+    intercept[IllegalArgumentException](Verify.subsetOf(" , "))
+  }
 }

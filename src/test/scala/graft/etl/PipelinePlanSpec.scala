@@ -1,15 +1,20 @@
 package graft.etl
 
 import java.time.LocalDate
-import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, ScalaUDF}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import java.util.concurrent.{Executors, TimeUnit}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, JsonToStructs, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import graft.SparkSpec
 
 /** Plan-shape guard for one shop job: each pipeline stage adds a few
   * projections (one per UDF island layer), not one per column, and each raw
   * line is parsed once — the adapters' skip and validation filters must not
   * be pushed beneath the `from_json` projection, where every pushed copy
-  * parses the line again. Driver-side planning of a job scales with both. */
+  * parses the line again. Driver-side planning of a job scales with both.
+  * `Pipeline.process` analyses each pipeline once per session and rebinds
+  * it to every job's input; the rebound plan must be the plan a fresh
+  * analysis gives. */
 class PipelinePlanSpec extends SparkSpec {
 
   private val lines = Map(
@@ -32,13 +37,22 @@ class PipelinePlanSpec extends SparkSpec {
   private def jsonParses(plan: LogicalPlan): Int =
     exprCount(plan) { case _: JsonToStructs => }
 
+  /** A one-product input file for `a`, plus one malformed line. */
+  private def input(a: Shops.ShopAdapter): String = {
+    val dir = java.nio.file.Files.createTempDirectory("plan-shape")
+    java.nio.file.Files.writeString(dir.resolve("in.jsonl"), lines(a.shopType) + "\n{\"x\":")
+    dir.resolve("in.jsonl").toString
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def projects(plan: LogicalPlan): Int = plan.collect { case p: Project => p }.size
+
   adapters.foreach { a =>
     test(s"${a.shopType}: few projections and one JSON parse per line") {
-      val dir = java.nio.file.Files.createTempDirectory("plan-shape")
-      java.nio.file.Files.writeString(dir.resolve("in.jsonl"), lines(a.shopType) + "\n{\"x\":")
-      val (good, bad) = Pipeline.readShopJsonLines(spark, a, dir.resolve("in.jsonl").toString)
+      val (good, bad) = Pipeline.readShopJsonLines(spark, a, input(a))
       val job = Sinks.withRunCounters(Pipeline.process(a, good)).queryExecution
-      val projects = job.analyzed.collect { case p: Project => p }.size
+      val projects = this.projects(job.analyzed)
       val udfs = exprCount(job.optimizedPlan) { case _: ScalaUDF => }
       assert(projects <= 12, s"$projects Project nodes in the analyzed job plan")
       assert(jsonParses(job.optimizedPlan) == 1, job.optimizedPlan.treeString)
@@ -47,5 +61,56 @@ class PipelinePlanSpec extends SparkSpec {
       // the single parse still splits good and malformed lines
       assert(good.count() == 1 && bad.count() == 1)
     }
+  }
+
+  adapters.foreach { a =>
+    test(s"${a.shopType}: a repeat process rebinds the analysed pipeline, same rows and plan shape") {
+      val path = input(a)
+      def good = Pipeline.readShopJsonLines(spark, a, path)._1
+      val first = Pipeline.process(a, good)
+      val repeat = Pipeline.process(a, good)
+      val fresh = Dedupe.keepBest(CalculateFields(a.unified(good)))
+      // handed to Dataset.ofRows already analysed: the analyzer skips it
+      assert(repeat.queryExecution.logical.analyzed)
+      val want = Sinks.withRunCounters(fresh).queryExecution
+      Seq(first, repeat).foreach { df =>
+        assert(rows(df) == rows(fresh) && rows(df).size == 1)
+        val job = Sinks.withRunCounters(df).queryExecution
+        assert(projects(job.analyzed) == projects(want.analyzed), job.analyzed.treeString)
+        assert(jsonParses(job.optimizedPlan) == 1)
+        assert(exprCount(job.optimizedPlan) { case _: ScalaUDF => } ==
+          exprCount(want.optimizedPlan) { case _: ScalaUDF => })
+        // the placeholder the pipeline was analysed over is gone
+        assert(job.analyzed.collect { case r: LocalRelation => r }.isEmpty, job.analyzed.treeString)
+      }
+    }
+  }
+
+  test("a SQL conf change re-analyses: the adapter's casts carry the current eval mode") {
+    val path = input(Shops.Ah)
+    val was = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("false", "true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val job = Pipeline.process(Shops.Ah, Pipeline.readShopJsonLines(spark, Shops.Ah, path)._1)
+      val casts = job.queryExecution.analyzed.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case c: Cast => c })
+      val mode = if (ansi.toBoolean) EvalMode.ANSI else EvalMode.LEGACY
+      assert(casts.nonEmpty && casts.forall(_.evalMode == mode),
+        s"ansi=$ansi: ${casts.map(_.evalMode).distinct}")
+    } finally spark.conf.set("spark.sql.ansi.enabled", was)
+  }
+
+  test("four threads processing one adapter at once get identical rows") {
+    val path = input(Shops.Jumbo)
+    // a conf value no template has seen, so all four threads miss together
+    val key = "graft.test.pipelineTemplate"
+    spark.conf.set(key, java.util.UUID.randomUUID.toString)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val jobs = (1 to 4).map(_ => pool.submit(() =>
+        rows(Pipeline.process(Shops.Jumbo, Pipeline.readShopJsonLines(spark, Shops.Jumbo, path)._1))))
+      val got = jobs.map(_.get(120, TimeUnit.SECONDS))
+      assert(got.distinct.size == 1 && got.head.size == 1, got)
+    } finally { pool.shutdownNow(); spark.conf.unset(key) }
   }
 }

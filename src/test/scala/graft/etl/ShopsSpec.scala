@@ -36,6 +36,15 @@ class ShopsSpec extends SparkSpec {
     assert(errs.collect().head.getAs[String]("error_type") == "PARSE_ERROR")
   }
 
+  test("readShopJsonLines drops blank and space-only lines: neither a good nor a K4 row") {
+    val dir = java.nio.file.Files.createTempDirectory("blank").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
+      jumboBase + "\n   \n\n" + jumboBase.replace("\"123\"", "\"456\"") + "\n \n")
+    val (good, bad) = Pipeline.readShopJsonLines(spark, Shops.Jumbo, s"$dir/in.json")
+    assert(good.count() == 2)
+    assert(bad.count() == 0)
+  }
+
   // ---- Jumbo ----
 
   private val jumboBase =
