@@ -25,10 +25,7 @@ object Jobs {
       nInactive: Long,
       nUncategorized: Long,
       startedAtMs: Long,
-      finishedAtMs: Long) {
-    def durationSec: Double = (finishedAtMs - startedAtMs) / 1000.0
-    def rowsPerSec: Double = if (durationSec > 0) nRows / durationSec else 0.0
-  }
+      finishedAtMs: Long)
 
   /** Run one shop job: process → observe counters → sink via `write`.
     * Returns the finalized job row (completeProcessingJob analog,

@@ -1388,7 +1388,6 @@ object Similarity {
       maxIter: Int): (DataFrame, Int, Boolean) = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    // symmetric edge list, self-loops dropped
     // localCheckpoint (not cache) per round: an iterative DataFrame loop
     // grows the logical plan by one join+agg per round, and re-analysis/
     // re-optimization over the whole history quickly dominates — the
@@ -1399,9 +1398,7 @@ object Similarity {
     // label-creating: the b side is filtered by the propagation join
     // below, the a side by this semi-join — without it an unknown src id
     // would enter the label set and surface in the output
-    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .filter($"a" =!= $"b").distinct()
+    val sym = Graph.symmetric(edges, srcCol, dstCol)
       .join(labels.select($"node".as("a")), Seq("a"), "left_semi")
       .localCheckpoint()
     val labelType = labels.schema("component").dataType

@@ -34,12 +34,6 @@ object Text {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  def md5Hex(s: String): String = {
-    val md = md5Local.get()
-    md.reset()
-    hexOf(md.digest(s.getBytes(StandardCharsets.UTF_8)))
-  }
-
   /** Whitespace tokens, empties dropped (matches `split(text,' ')` + filter). */
   def tokens(text: String): Array[String] =
     if (text == null) Array.empty else text.split(" ").filter(_.nonEmpty)

@@ -380,9 +380,7 @@ object GraphEvents {
       (col("o_orderkey") % col("_m")).as("src"),
       ((col("o_orderkey") * 7 + 1) % (col("o_orderkey") % col("_m") + 1))
         .as("dst"))
-    val und = e.select(least($"src", $"dst").as("a"),
-        greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct().localCheckpoint()
+    val und = Graph.undirected(e, "src", "dst").localCheckpoint()
     val nEdges = und.count()
     val nNodes = und.select($"a".as("node"))
       .union(und.select($"b".as("node"))).distinct().count()

@@ -24,8 +24,8 @@ import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
   * allowlist + anti-rot + negative-control pattern as WindowLintSpec:
   *
   *  1. SOURCE lint: every driver-action call site in `src/main/scala`
-  *     (minus `graft/dev/` probes and PlanDump, which are measurement
-  *     harnesses) must be in [[driverActionAllow]] with its bound stated
+  *     (minus `graft/dev/` probes, which are measurement harnesses)
+  *     must be in [[driverActionAllow]] with its bound stated
   *     — a new uncapped `.collect()` in a hot path fails this suite
   *     instead of shipping.
   *  2. PLAN lint: every `Collect*` aggregate in every
@@ -53,7 +53,7 @@ class CollectLintSpec extends SparkSpec {
   /** Files outside the lint's jurisdiction: measurement probes that
     * exist to print things on purpose. */
   private def exempt(rel: String): Boolean =
-    rel.startsWith("graft/dev/") || rel == "graft/PlanDump.scala"
+    rel.startsWith("graft/dev/")
 
   /** (relative path, trimmed line) -> (occurrences, why it is bounded).
     * Every entry is an audited driver materialization; the anti-rot test

@@ -41,24 +41,21 @@ class RealSamplesSpec extends SparkSpec {
   test("AH adapter digests the real 1000-product scrape") {
     val path = sample("ah_scrape")
     assume(path.isDefined, "reference samples not mounted")
-    val raw = spark.read.schema(Shops.Ah.schema)
-      .option("multiLine", true).json(path.get)
+    val raw = Pipeline.readShopJson(spark, Shops.Ah, path.get)
     checkUnified(Pipeline.process(Shops.Ah, raw), minRows = 500)
   }
 
   test("Jumbo adapter digests the real scrape") {
     val path = sample("jumbo_scrape")
     assume(path.isDefined, "reference samples not mounted")
-    val raw = spark.read.schema(Shops.Jumbo.schema)
-      .option("multiLine", true).json(path.get)
+    val raw = Pipeline.readShopJson(spark, Shops.Jumbo, path.get)
     checkUnified(Pipeline.process(Shops.Jumbo, raw), minRows = 50)
   }
 
   test("Aldi adapter digests the real scrape") {
     val path = sample("aldi_scrape")
     assume(path.isDefined, "reference samples not mounted")
-    val raw = spark.read.schema(Shops.Aldi.schema)
-      .option("multiLine", true).json(path.get)
+    val raw = Pipeline.readShopJson(spark, Shops.Aldi, path.get)
     checkUnified(Pipeline.process(Shops.Aldi, raw), minRows = 50)
   }
 
@@ -67,12 +64,11 @@ class RealSamplesSpec extends SparkSpec {
     val envelope = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("product", Shops.Plus.schema)))
     val unified = Pipeline.processAll(spark, Map(
-      "AH" -> spark.read.schema(Shops.Ah.schema).option("multiLine", true)
-        .json(sample("ah_scrape").get),
-      "JUMBO" -> spark.read.schema(Shops.Jumbo.schema).option("multiLine", true)
-        .json(sample("jumbo_scrape").get),
-      "ALDI" -> spark.read.schema(Shops.Aldi.schema).option("multiLine", true)
-        .json(sample("aldi_scrape").get),
+      "AH" -> Pipeline.readShopJson(spark, Shops.Ah, sample("ah_scrape").get),
+      "JUMBO" -> Pipeline.readShopJson(spark, Shops.Jumbo,
+        sample("jumbo_scrape").get),
+      "ALDI" -> Pipeline.readShopJson(spark, Shops.Aldi,
+        sample("aldi_scrape").get),
       "PLUS" -> spark.read.schema(envelope).option("multiLine", true)
         .json(sample("plus_scrape").get).select("product.*"))).cache()
     assert(unified.select("shop_type").distinct().count() == 4)

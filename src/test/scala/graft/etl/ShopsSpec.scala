@@ -45,6 +45,19 @@ class ShopsSpec extends SparkSpec {
     assert(bad.count() == 0)
   }
 
+  test("readShopJson reads a multiLine JSON-array file through the adapter") {
+    val dir = java.nio.file.Files.createTempDirectory("array").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
+      "[\n  " + jumboBase + ",\n  " +
+        jumboBase.replace("\"123\"", "\"456\"").replace("199", "249") + "\n]\n")
+    val out = Pipeline.process(Shops.Jumbo,
+      Pipeline.readShopJson(spark, Shops.Jumbo, s"$dir/in.json"))
+    val rows = out.orderBy("unified_id").collect()
+    assert(rows.map(get[String](_, "unified_id")).toSeq == Seq("123", "456"))
+    assert(rows.map(get[Double](_, "current_price")).toSeq == Seq(1.99, 2.49))
+    assert(out.columns.toSeq == graft.model.UnifiedProduct.requiredFields)
+  }
+
   // ---- Jumbo ----
 
   private val jumboBase =

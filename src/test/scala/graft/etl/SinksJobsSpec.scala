@@ -174,4 +174,88 @@ class SinksJobsSpec extends SparkSpec {
     assert(out("b") == (1L, 3L, 2L, 3333L))
     assert(out("c") == (1L, 3L, 2L, 3333L))
   }
+
+  test("jobStats: per-shop job count, completions, rows and success rate") {
+    import spark.implicits._
+    val jobs = Seq(
+      Jobs.JobResult("j1", "AH", "completed", 10, 0, 0, 0, 0, 1),
+      Jobs.JobResult("j2", "AH", "failed: sink down", 0, 0, 0, 0, 0, 1),
+      Jobs.JobResult("j3", "JUMBO", "completed", 3, 0, 0, 0, 0, 1),
+      Jobs.JobResult("j4", "JUMBO", "completed", 4, 0, 0, 0, 0, 1)).toDF()
+    val out = Jobs.jobStats(jobs).collect().map(r =>
+      (r.getAs[String]("shopType"), r.getAs[Long]("n_jobs"),
+        r.getAs[Long]("n_completed"), r.getAs[Long]("total_rows"),
+        r.getAs[Double]("success_rate")))
+    assert(out.toSeq == Seq(("AH", 2L, 1L, 10L, 50.0),
+      ("JUMBO", 2L, 2L, 7L, 100.0)))
+  }
+
+  test("mappingMethodStats counts rows per category mapping method") {
+    import spark.implicits._
+    val rows = Seq("direct", "ml", "direct", "fuzzy", "ml", "direct")
+      .toDF("category_mapping_method")
+    val out = Analytics.mappingMethodStats(rows).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    assert(out.toSeq == Seq("direct" -> 3L, "ml" -> 2L, "fuzzy" -> 1L))
+  }
+
+  test("mlPredictions reads the dimension from JSON and from parquet") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("preds")
+    java.nio.file.Files.writeString(dir.resolve("preds.json"),
+      """{"title":"Magere melk 1L","category":"Zuivel, eieren","confidence":1}""")
+    Seq(("Magere melk 1L", "Zuivel, eieren", 0.95))
+      .toDF("title", "category", "confidence")
+      .write.parquet(dir.resolve("preds.parquet").toString)
+    val products = Seq(("Magere melk 1L", "volstrekt onbekend 123"))
+      .toDF("title", "main_category")
+    for ((file, conf) <- Seq("preds.json" -> 1.0, "preds.parquet" -> 0.95)) {
+      val preds = Sources.mlPredictions(spark, dir.resolve(file).toString)
+      assert(preds.columns.toSeq == Seq("title", "ml_category", "ml_confidence"))
+      assert(preds.collect().map(r => (r.getString(0), r.getString(1),
+        r.getDouble(2))).toSeq == Seq(("Magere melk 1L", "Zuivel, eieren", conf)))
+      val out = Sources.withMlCategory(products, preds, "JUMBO").collect().head
+      assert(out.getAs[String]("category_mapping_method") == "ml", file)
+    }
+  }
+
+  test("rawProducts pushes its predicates into the JDBC scan and splits it by partition column") {
+    val url = "jdbc:derby:memory:rawdb;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    st.execute("CREATE SCHEMA raw")
+    st.execute("""CREATE TABLE raw.products ("id" INT NOT NULL PRIMARY KEY,
+      "shop_type" VARCHAR(16), "job_id" VARCHAR(16), "scraped_at" TIMESTAMP)""")
+    st.execute("""INSERT INTO raw.products VALUES
+      (1, 'AH', 'j1', '2024-01-01 10:00:00'), (2, 'AH', 'j2', '2024-03-01 10:00:00'),
+      (3, 'JUMBO', 'j1', '2024-03-01 10:00:00'), (4, 'AH', 'j1', '2024-03-05 10:00:00'),
+      (5, 'ALDI', 'j3', '2024-03-06 10:00:00'), (6, 'AH', 'j1', '2024-02-01 10:00:00'),
+      (7, 'AH', 'j1', '2024-04-01 10:00:00')""")
+    st.close(); conn.close()
+
+    def read(partitioning: Option[(String, Long, Long, Int)]) =
+      Sources.rawProducts(spark, url, new java.util.Properties(),
+        shopType = Some("AH"), jobId = Some("j1"),
+        scrapedAfter = Some(java.sql.Timestamp.valueOf("2024-02-15 00:00:00")),
+        partitioning = partitioning)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getInt(0)).sorted.toSeq
+
+    val whole = read(None)
+    assert(ids(whole) == Seq(4, 7))
+    // the filters the JDBC source evaluates itself, in its WHERE clause
+    val pushed = whole.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.handledFilters
+    }.get
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual}
+    assert(pushed.contains(EqualTo("shop_type", "AH")), pushed)
+    assert(pushed.contains(EqualTo("job_id", "j1")), pushed)
+    assert(pushed.exists {
+      case GreaterThanOrEqual("scraped_at", _) => true
+      case _ => false
+    }, pushed)
+    val split = read(Some(("id", 1L, 8L, 3)))
+    assert(split.rdd.getNumPartitions == 3)
+    assert(ids(split) == Seq(4, 7))
+  }
 }
