@@ -57,8 +57,7 @@ object GenericAdapter {
   }
 
   /** JS `a || b` over extracted JSON strings (null or '' falls through). */
-  private def js(paths: String*): Column =
-    coalesce(paths.map(p => nullif(j(p), lit(""))): _*)
+  private def js(paths: String*): Column = Shops.orElse(paths.map(j): _*)
 
   private def num(c: Column): Column =
     nullif(regexp_extract(regexp_replace(coalesce(c, lit("")), "[^0-9.-]", ""),

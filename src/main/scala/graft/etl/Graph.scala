@@ -83,7 +83,12 @@ object Graph {
     * AQE-coalescible. Output: (node, triangles) for every node that appears
     * in an edge (0 for triangle-free nodes).
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    trianglesAndDegrees(edges, srcCol, dstCol).select(col("node"), col("triangles"))
+
+  /** [[triangleCounts]]' (node, triangles) with each node's degree `deg`. */
+  private def trianglesAndDegrees(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
     val deg = degrees(und, "n")
     val oriented = und
@@ -104,7 +109,7 @@ object Graph {
     val perNode = tri
       .select(explode(array(col("w0"), col("x"), col("y"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("triangles"))
-    deg.select(col("n").as("node"))
+    deg.select(col("n").as("node"), col("deg"))
       .join(perNode.select(col("n").as("node"), col("triangles")), Seq("node"), "left")
       .na.fill(0L, Seq("triangles"))
   }
@@ -434,19 +439,16 @@ object Graph {
     * degree < 2 — "how close is each node's neighborhood to a clique",
     * the per-node refinement of the global triangle count.
     *
-    * Rides [[triangleCounts]] (compact-forward orientation, O(E^1.5)
-    * wedge bound) plus one degree aggregation and a node-keyed join; no
-    * new fan-out beyond what the triangle pass already bounds. */
+    * Rides [[triangleCounts]]' pass (compact-forward orientation, O(E^1.5)
+    * wedge bound), whose degree table gives `deg`; no new fan-out beyond
+    * what the triangle pass already bounds. */
   def clusteringCoefficientBp(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val deg = degrees(undirected(edges, srcCol, dstCol), "n")
-    triangleCounts(edges, srcCol, dstCol)
-      .join(deg.select(col("n").as("node"), col("deg")), "node")
+      dstCol: String): DataFrame =
+    trianglesAndDegrees(edges, srcCol, dstCol)
       .select(col("node"), col("triangles"), col("deg"),
         when(col("deg") >= 2,
           expr("triangles * 20000L div (deg * (deg - 1L))"))
           .as("cc_bp"))
-  }
 
   /** Degree assortativity of an undirected graph as a signed, pre-scaled
     * integer: the Pearson correlation of (deg(u), deg(v)) over all directed

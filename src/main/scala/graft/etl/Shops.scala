@@ -3,7 +3,7 @@ package graft.etl
 import java.time.{DayOfWeek, LocalDate}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.RawSchemas
+import graft.model.{RawSchemas, UnifiedProduct}
 
 /** Per-shop raw→unified adapters (SURVEY.md §2.3 F1–F4, §2.4 T1–T4, §2.6 U5–U6).
   *
@@ -21,7 +21,7 @@ import graft.model.RawSchemas
 object Shops {
 
   /** JS `a || b` for string columns: empty string falls through. */
-  private def orElse(cols: Column*): Column =
+  private[etl] def orElse(cols: Column*): Column =
     coalesce(cols.map(c => nullif(c, lit(""))): _*)
 
   /** U5 shared quantity regex: first `(\d+[.,]?\d*)\s*(\w+)` match. */
@@ -39,38 +39,33 @@ object Shops {
   /** Template finalization (T6, unified-product-template.ts:161-231): JS
     * `||` defaults per field group; fixes column order to the 32-field
     * contract. Input must already contain all 32 columns. */
-  def finalizeTemplate(df: DataFrame): DataFrame = df.select(template(col): _*)
+  def finalizeTemplate(df: DataFrame): DataFrame = df.select(template(n => Some(col(n))): _*)
 
-  /** The template's 32 columns over `field`, which gives each unified field
-    * by name: a frame's column, or an adapter's expression for it. */
-  private def template(field: String => Column): Seq[Column] = {
-    def s(n: String) = coalesce(field(n), lit("")).as(n) // string || ''
-    def keep(n: String) = field(n).as(n)
-    Seq(
-      s("unified_id"), s("shop_type"), s("title"),
-      nullif(coalesce(field("main_category"), lit("")), lit("")).as("main_category"),
-      s("brand"), s("image_url"), s("sales_unit_size"),
-      coalesce(field("quantity_amount"), lit(0.0)).as("quantity_amount"),
-      s("quantity_unit"),
-      keep("default_quantity_amount"), keep("default_quantity_unit"),
-      coalesce(field("price_before_bonus"), lit(0.0)).as("price_before_bonus"),
-      coalesce(field("current_price"), lit(0.0)).as("current_price"),
-      keep("unit_price"), keep("unit_price_unit"),
-      coalesce(field("is_promotion"), lit(false)).as("is_promotion"),
-      coalesce(nullif(field("promotion_type"), lit("")), lit("none")).as("promotion_type"),
-      coalesce(nullif(field("promotion_mechanism"), lit("")), lit("none"))
-        .as("promotion_mechanism"),
-      keep("promotion_start_date"), keep("promotion_end_date"),
-      keep("parsed_promotion_effective_unit_price"),
-      keep("parsed_promotion_required_quantity"),
-      keep("parsed_promotion_total_price"),
-      keep("parsed_promotion_is_multi_purchase_required"),
-      keep("normalized_quantity_amount"), keep("normalized_quantity_unit"),
-      keep("conversion_factor"),
-      keep("price_per_standard_unit"), keep("current_price_per_standard_unit"),
-      keep("discount_absolute"), keep("discount_percentage"),
-      coalesce(field("is_active"), lit(true)).as("is_active"))
+  /** The template's JS `||` defaults (unified-product-template.ts:161-219),
+    * by field; a field not named here keeps its value, null included. */
+  private val defaults: Map[String, Column => Column] = {
+    val str = (c: Column) => coalesce(c, lit(""))
+    val zero = (c: Column) => coalesce(c, lit(0.0))
+    val none = (c: Column) => coalesce(nullif(c, lit("")), lit("none"))
+    Map(
+      "unified_id" -> str, "shop_type" -> str, "title" -> str,
+      "main_category" -> ((c: Column) => nullif(str(c), lit(""))),
+      "brand" -> str, "image_url" -> str, "sales_unit_size" -> str,
+      "quantity_amount" -> zero, "quantity_unit" -> str,
+      "price_before_bonus" -> zero, "current_price" -> zero,
+      "is_promotion" -> ((c: Column) => coalesce(c, lit(false))),
+      "promotion_type" -> none, "promotion_mechanism" -> none,
+      "is_active" -> ((c: Column) => coalesce(c, lit(true))))
   }
+
+  /** The contract's columns in [[UnifiedProduct.schema]] order over `field`,
+    * which gives a unified field by name (a frame's column, or an adapter's
+    * expression for it); a field it does not give is a typed null. */
+  private def template(field: String => Option[Column]): Seq[Column] =
+    UnifiedProduct.schema.map { f =>
+      val c = field(f.name).getOrElse(lit(null).cast(f.dataType))
+      defaults.get(f.name).fold(c)(_(c)).as(f.name)
+    }
 
   trait ShopAdapter {
     def shopType: String
@@ -84,12 +79,54 @@ object Shops {
       * projection per UDF island layer (an island and the inputs it reads
       * never share one), so each island is evaluated once per row. */
     protected def prepare(df: DataFrame): DataFrame
-    /** The 32 unified fields by name, as expressions over `prepare`'s output. */
+    /** The unified fields this shop derives, by name, as expressions over
+      * `prepare`'s output; `quantity_amount` and `quantity_unit` are
+      * required. */
     protected def fields: Map[String, Column]
     /** read → skip/validation filter → transform → template: one filter,
-      * `prepare`'s projections, one projection for the fields. */
-    def unified(df: DataFrame): DataFrame =
-      prepare(df.filter(!skip && !transformError)).select(template(fields): _*)
+      * `prepare`'s projections, one projection for the fields. Every shop
+      * adds its type, conversion factor 1 and its quantity as the
+      * normalized quantity; CalculateFields derives the rest. */
+    def unified(df: DataFrame): DataFrame = {
+      val f = fields
+      val common = Map(
+        "shop_type" -> lit(shopType),
+        "conversion_factor" -> lit(1.0),
+        "normalized_quantity_amount" -> f("quantity_amount"),
+        "normalized_quantity_unit" -> f("quantity_unit"))
+      prepare(df.filter(!skip && !transformError)).select(template((f ++ common).get): _*)
+    }
+  }
+
+  /** `_parsed`, the promo parse of `_mech` (the mechanism text) against
+    * the base price `pbb` and current price `cp`; null when `_mech` is
+    * empty. */
+  private def withParsedPromo(df: DataFrame, pbb: Column, cp: Column): DataFrame =
+    df.select(col("*"),
+      when(col("_mech") =!= "", Udfs.parsePromo(col("_mech"), pbb, cp)).as("_parsed"))
+
+  /** The parsed promotion's effective unit price when it gives a non-zero
+    * one, else `otherwise`. */
+  private def parsedPriceOr(otherwise: Column): Column = {
+    val price = col("_parsed")("effective_unit_price")
+    when(col("_mech") =!= "" && coalesce(price, lit(0.0)) =!= 0.0, price).otherwise(otherwise)
+  }
+
+  /** The mechanism, the parsed promotion's fields and the discount of the
+    * shops whose promotion is free text (Jumbo, Aldi, Plus), for current
+    * price `cp` against base price `pbb`. */
+  private def parsedPromoFields(cp: Column, pbb: Column): Map[String, Column] = {
+    val mech = col("_mech")
+    val parsed = col("_parsed")
+    Map(
+      "promotion_mechanism" -> mech,
+      "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
+      "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
+      "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
+      "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
+        coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
+      "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
+      "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100))
   }
 
   /** AH — F1 (ah.ts:672-695) + T1/T8 (ah.ts:146-623). */
@@ -157,7 +194,6 @@ object Shops {
       val upd = col("unitPriceDescription")
       Map(
         "unified_id" -> coalesce(col("webshopId").cast("string"), lit("unknown")),
-        "shop_type" -> lit(shopType),
         "title" -> col("title"),
         "main_category" -> col("_cat")("category"),
         "brand" -> coalesce(col("brand"), lit("")),
@@ -188,11 +224,6 @@ object Shops {
         "parsed_promotion_total_price" -> disc("total_price"),
         "parsed_promotion_is_multi_purchase_required" ->
           coalesce(disc("is_multi_purchase_required"), lit(false)),
-        "normalized_quantity_amount" -> qtyAmount(sus),
-        "normalized_quantity_unit" -> unit,
-        "conversion_factor" -> lit(1.0),
-        "price_per_standard_unit" -> lit(null).cast("double"),
-        "current_price_per_standard_unit" -> lit(null).cast("double"),
         "discount_absolute" -> when(isPromo && pbb > 0 && cp < pbb, pbb - cp),
         "discount_percentage" -> when(isPromo && pbb > 0 && cp < pbb, (pbb - cp) / pbb * 100),
         "is_active" -> (col("orderAvailabilityStatus") === "IN_ASSORTMENT"))
@@ -216,14 +247,8 @@ object Shops {
     private val pbb = coalesce(p("prices")("price"), lit(0L)) / 100.0
     private val qtySrc = orElse(p("quantity"), p("subtitle"))
     private val mech = col("_mech")
-    private val parsed = col("_parsed")
-    private val cp = {
-      val fromParse = when(mech =!= "" &&
-          coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
-        parsed("effective_unit_price")).otherwise(pbb)
-      when(coalesce(p("prices")("promoPrice"), lit(0L)) > 0,
-        p("prices")("promoPrice") / 100.0).otherwise(fromParse)
-    }
+    private val cp = when(coalesce(p("prices")("promoPrice"), lit(0L)) > 0,
+      p("prices")("promoPrice") / 100.0).otherwise(parsedPriceOr(pbb))
 
     protected def prepare(df: DataFrame): DataFrame = {
       val promoTags = when(p("promotions").isNotNull && size(p("promotions")) > 0,
@@ -234,12 +259,11 @@ object Shops {
                 org.apache.spark.sql.types.StructField("text",
                   org.apache.spark.sql.types.StringType)))))),
             t => t("text")), array()))), "; ")).otherwise(lit(""))
-      df.select(col("*"), promoTags.as("_mech"),
+      withParsedPromo(df.select(col("*"), promoTags.as("_mech"),
           Udfs.normalizeCategory(
             p("title"), coalesce(p("category"), lit("")), lit(shopType)).as("_cat"),
-          when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk")).as("_unit"))
-        .select(col("*"),
-          when(mech =!= "", Udfs.parsePromo(mech, pbb, pbb)).as("_parsed"))
+          when(qtySrc.isNotNull, qtyUnit(qtySrc)).otherwise(lit("stuk")).as("_unit")),
+        pbb, pbb)
     }
 
     protected def fields: Map[String, Column] = {
@@ -247,7 +271,6 @@ object Shops {
       val qtyU = col("_unit")
       Map(
         "unified_id" -> coalesce(p("id"), lit("unknown")),
-        "shop_type" -> lit(shopType),
         "title" -> p("title"),
         "main_category" -> col("_cat")("category"),
         "brand" -> orElse(p("brand"), element_at(split(p("title"), " "), 1), lit("")),
@@ -269,23 +292,8 @@ object Shops {
         "promotion_type" -> when(mech =!= "",
           when(mech.contains("%"), lit("DISCOUNT_PERCENTAGE"))
             .otherwise(lit("DISCOUNT_AMOUNT"))).otherwise(lit("")),
-        "promotion_mechanism" -> mech,
-        "promotion_start_date" -> lit(null).cast("string"),
-        "promotion_end_date" -> lit(null).cast("string"),
-        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
-        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
-        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
-        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
-          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
-        "normalized_quantity_amount" -> qtyAmt,
-        "normalized_quantity_unit" -> qtyU,
-        "conversion_factor" -> lit(1.0),
-        "price_per_standard_unit" -> lit(null).cast("double"),
-        "current_price_per_standard_unit" -> lit(null).cast("double"),
-        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
-        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
         "is_active" -> (!(p("availability")("isAvailable") === false) &&
-          !(p("inAssortment") === false)))
+          !(p("inAssortment") === false))) ++ parsedPromoFields(cp, pbb)
     }
 
     // avoid clash with this file's DataFrame import of functions.transform
@@ -305,12 +313,8 @@ object Shops {
       coalesce(col("isSoldOut"), lit(false)) ||
       col("mainCategory") <=> "cadeaukaarten"
 
-    private val mech = col("_mech")
     private val pbb = col("_pbb")
-    private val parsed = col("_parsed")
-    private val cp =
-      when(mech =!= "" && coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
-        parsed("effective_unit_price")).otherwise(pbb)
+    private val cp = parsedPriceOr(pbb)
     private val isPromo = col("_isPromo")
     private val start = col("_start")
 
@@ -375,12 +379,12 @@ object Shops {
         .when(sdValue =!= "" && size(sdParts) >= 2, element_at(sdParts, 2))
       val qUnit = when(qUnitRaw.isNotNull, Udfs.normalizeUnit(qUnitRaw)).otherwise(lit("stuk"))
 
-      df.select(col("*"), promoMech.as("_mech"),
+      withParsedPromo(df.select(col("*"), promoMech.as("_mech"),
           when(col("oldPrice").isNotNull, oldP).otherwise(priceParsed).as("_pbb"),
           promo.as("_isPromo"), startParsed.as("_start"),
           Udfs.normalizeCategory(col("title"), initialCat, lit(shopType)).as("_cat"),
-          qAmt.as("_qty"), qUnit.as("_unit"))
-        .select(col("*"), when(mech =!= "", Udfs.parsePromo(mech, pbb, pbb)).as("_parsed"))
+          qAmt.as("_qty"), qUnit.as("_unit")),
+        pbb, pbb)
     }
 
     protected def fields: Map[String, Column] = {
@@ -403,7 +407,6 @@ object Shops {
       val weekly = isPromo || col("mainCategory") === "discount"
       Map(
         "unified_id" -> coalesce(col("articleNumber"), lit("unknown")),
-        "shop_type" -> lit(shopType),
         "title" -> col("title"),
         "main_category" -> col("_cat")("category"),
         "brand" -> coalesce(trim(col("brandName")), lit("")),
@@ -422,23 +425,10 @@ object Shops {
             Udfs.normalizeUnit(regexp_extract(col("basePriceFormatted"), "/([a-zA-Z]+)", 1))),
         "is_promotion" -> isPromo,
         "promotion_type" -> promoType,
-        "promotion_mechanism" -> mech,
         "promotion_start_date" -> coalesce(start, when(weekly, weekStart)),
         "promotion_end_date" -> when(start.isNull && weekly, weekEnd),
-        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
-        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
-        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
-        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
-          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
-        "normalized_quantity_amount" -> qAmt,
-        "normalized_quantity_unit" -> qUnit,
-        "conversion_factor" -> lit(1.0),
-        "price_per_standard_unit" -> lit(null).cast("double"),
-        "current_price_per_standard_unit" -> lit(null).cast("double"),
-        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
-        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
         "is_active" -> (!coalesce(col("isNotAvailable"), lit(false)) &&
-          !coalesce(col("isSoldOut"), lit(false))))
+          !coalesce(col("isSoldOut"), lit(false)))) ++ parsedPromoFields(cp, pbb)
     }
   }
 
@@ -472,12 +462,8 @@ object Shops {
     private val isPromo = p("PromotionLabel").isNotNull &&
       (p("PromotionStartDate").isNull || p("PromotionStartDate") =!= "1900-01-01") &&
       (p("PromotionEndDate").isNull || p("PromotionEndDate") =!= "1900-01-01")
-    private val mech = col("_mech")
     private val pbb = col("_pbb")
-    private val parsed = col("_parsed")
-    private val cp =
-      when(mech =!= "" && coalesce(parsed("effective_unit_price"), lit(0.0)) =!= 0.0,
-        parsed("effective_unit_price")).otherwise(col("_icp"))
+    private val cp = parsedPriceOr(col("_icp"))
 
     protected def prepare(df: DataFrame): DataFrame = {
       val newP = p("NewPrice").cast("double")
@@ -505,14 +491,13 @@ object Shops {
         .when(p("Packging").isNotNull, Udfs.normalizeUnit(p("Packging")))
         .otherwise(lit("stuk"))
 
-      df.select(col("*"),
+      withParsedPromo(df.select(col("*"),
           when(isPromo, coalesce(p("PromotionLabel"), lit(""))).otherwise(lit("")).as("_mech"),
           rawPbb.as("_pbb"), initialCp.as("_icp"),
           when(initialCat.isNotNull,
             Udfs.normalizeCategory(p("Name"), initialCat, lit(shopType))("category")).as("_cat"),
-          qAmt.as("_qty"), qUnit.as("_unit"))
-        .select(col("*"),
-          when(mech =!= "", Udfs.parsePromo(mech, pbb, col("_icp"))).as("_parsed"))
+          qAmt.as("_qty"), qUnit.as("_unit")),
+        pbb, col("_icp"))
     }
 
     protected def fields: Map[String, Column] = {
@@ -529,7 +514,6 @@ object Shops {
 
       Map(
         "unified_id" -> p("SKU"),
-        "shop_type" -> lit(shopType),
         "title" -> p("Name"),
         "main_category" -> col("_cat"),
         "brand" -> orElse(p("Brand"), element_at(split(p("Name"), " "), 1)),
@@ -547,22 +531,9 @@ object Shops {
         "unit_price_unit" -> when(upValid, upUnit),
         "is_promotion" -> isPromo,
         "promotion_type" -> when(isPromo, lit("DISCOUNT")).otherwise(lit("")),
-        "promotion_mechanism" -> mech,
         "promotion_start_date" -> when(isPromo, p("PromotionStartDate")),
         "promotion_end_date" -> when(isPromo, p("PromotionEndDate")),
-        "parsed_promotion_effective_unit_price" -> when(cp < pbb, cp),
-        "parsed_promotion_required_quantity" -> when(mech =!= "", parsed("required_quantity")),
-        "parsed_promotion_total_price" -> when(mech =!= "", parsed("total_promotion_price")),
-        "parsed_promotion_is_multi_purchase_required" -> coalesce(when(mech =!= "",
-          coalesce(parsed("is_multi_purchase_required"), lit(false))), lit(false)),
-        "normalized_quantity_amount" -> qAmt,
-        "normalized_quantity_unit" -> qUnit,
-        "conversion_factor" -> lit(1.0),
-        "price_per_standard_unit" -> lit(null).cast("double"),
-        "current_price_per_standard_unit" -> lit(null).cast("double"),
-        "discount_absolute" -> when(cp < pbb && pbb > 0, pbb - cp),
-        "discount_percentage" -> when(cp < pbb && pbb > 0, (pbb - cp) / pbb * 100),
-        "is_active" -> p("IsAvailable"))
+        "is_active" -> p("IsAvailable")) ++ parsedPromoFields(cp, pbb)
     }
   }
 

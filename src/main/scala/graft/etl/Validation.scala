@@ -20,7 +20,7 @@ object Validation {
     Rule("required_title", "error",
       coalesce(trim(col("title")), lit("")) =!= ""),
     Rule("required_shoptype", "error",
-      col("shop_type").isInCollection(Seq("AH", "JUMBO", "ALDI", "PLUS"))),
+      col("shop_type").isInCollection(Shops.all.map(_.shopType))),
     Rule("valid_price", "error", col("price_before_bonus") > 0),
     Rule("price_consistency", "warning",
       when(col("is_promotion"), col("current_price") =!= col("price_before_bonus"))

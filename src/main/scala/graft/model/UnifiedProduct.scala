@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 
 /** The unified 32-field product contract (SURVEY.md §1.2).
@@ -7,7 +8,7 @@ import org.apache.spark.sql.types._
   * Reference: `projects/processor/src/core/structure/unified-product-template.ts:11-115`
   * and `src/types/product.ts:6-56`. "No fields can be omitted — null is
   * allowed for optional fields" — in Spark the fixed schema makes structural
-  * compliance free; the template defaults live in [[UnifiedProduct.defaults]].
+  * compliance free; the template defaults live in [[graft.etl.Shops.finalizeTemplate]].
   */
 final case class UnifiedProduct(
     // Core identification
@@ -58,67 +59,13 @@ object UnifiedProduct {
 
   val CurrentSchemaVersion = "1.0.0" // infrastructure/database/types.ts:310
 
-  /** The 32 required field names, in contract order
-    * (unified-product-template.ts:11-21). */
-  val requiredFields: Seq[String] = Seq(
-    "unified_id", "shop_type", "title", "main_category",
-    "brand", "image_url", "sales_unit_size",
-    "quantity_amount", "quantity_unit", "default_quantity_amount", "default_quantity_unit",
-    "price_before_bonus", "current_price", "unit_price", "unit_price_unit",
-    "is_promotion", "promotion_type", "promotion_mechanism",
-    "promotion_start_date", "promotion_end_date",
-    "parsed_promotion_effective_unit_price", "parsed_promotion_required_quantity",
-    "parsed_promotion_total_price", "parsed_promotion_is_multi_purchase_required",
-    "normalized_quantity_amount", "normalized_quantity_unit", "conversion_factor",
-    "price_per_standard_unit", "current_price_per_standard_unit",
-    "discount_absolute", "discount_percentage", "is_active")
+  /** The contract's columns: names in contract order
+    * (unified-product-template.ts:11-21) and Spark types, an `Option` field
+    * nullable. */
+  val schema: StructType = Encoders.product[UnifiedProduct].schema
 
-  /** Template defaults (unified-product-template.ts:161-219):
-    * strings `''`, numbers `0`, booleans `false`, promotion type/mechanism
-    * `'none'`, nullable optionals null, `is_active` true. */
-  def template(
-      unified_id: String = "",
-      shop_type: String = "",
-      title: String = "",
-      main_category: Option[String] = None,
-      brand: String = "",
-      image_url: String = "",
-      sales_unit_size: String = "",
-      quantity_amount: Double = 0,
-      quantity_unit: String = "",
-      default_quantity_amount: Option[Double] = None,
-      default_quantity_unit: Option[String] = None,
-      price_before_bonus: Double = 0,
-      current_price: Double = 0,
-      unit_price: Option[Double] = None,
-      unit_price_unit: Option[String] = None,
-      is_promotion: Boolean = false,
-      promotion_type: String = "none",
-      promotion_mechanism: String = "none",
-      promotion_start_date: Option[String] = None,
-      promotion_end_date: Option[String] = None,
-      parsed_promotion_effective_unit_price: Option[Double] = None,
-      parsed_promotion_required_quantity: Option[Double] = None,
-      parsed_promotion_total_price: Option[Double] = None,
-      parsed_promotion_is_multi_purchase_required: Option[Boolean] = None,
-      normalized_quantity_amount: Option[Double] = None,
-      normalized_quantity_unit: Option[String] = None,
-      conversion_factor: Option[Double] = None,
-      price_per_standard_unit: Option[Double] = None,
-      current_price_per_standard_unit: Option[Double] = None,
-      discount_absolute: Option[Double] = None,
-      discount_percentage: Option[Double] = None,
-      is_active: Boolean = true): UnifiedProduct =
-    UnifiedProduct(unified_id, shop_type, title, main_category, brand, image_url,
-      sales_unit_size, quantity_amount, quantity_unit, default_quantity_amount,
-      default_quantity_unit, price_before_bonus, current_price, unit_price,
-      unit_price_unit, is_promotion, promotion_type, promotion_mechanism,
-      promotion_start_date, promotion_end_date,
-      parsed_promotion_effective_unit_price, parsed_promotion_required_quantity,
-      parsed_promotion_total_price, parsed_promotion_is_multi_purchase_required,
-      normalized_quantity_amount, normalized_quantity_unit, conversion_factor,
-      price_per_standard_unit, current_price_per_standard_unit,
-      discount_absolute, discount_percentage, is_active)
+  /** The 32 required field names, in contract order. */
+  val requiredFields: Seq[String] = schema.fieldNames.toSeq
 }
 
 /** Per-shop raw input schemas (SURVEY.md §1.3) for `spark.read.schema(...)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -394,22 +394,6 @@ object EventsStreaming {
           out.result().iterator
       }.toDF()
   }
-
-  /** Change-detection sink (J3/K2-shaped): every micro-batch is reduced to
-    * changed-rows via content hash and merged into the target parquet dir —
-    * `foreachBatch` is where a real deployment issues MERGE INTO. */
-  def changeDetectingSink(unified: DataFrame, targetDir: String,
-      checkpointDir: String): StreamingQuery =
-    unified.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.withColumn("content_hash",
-            sha2(to_json(struct(batch.columns.map(col): _*)), 256))
-          .dropDuplicates("content_hash")
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
 
   /** K2/K3 parity sink: every micro-batch goes through the SAME
     * stage-to-temp + transactional MERGE path the batch side uses
@@ -896,11 +880,4 @@ object EventsStreaming {
     * micro-batch and broadcast, so the stream side never shuffles. */
   def enriched(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
-
-  /** File-source ingestion: land scraper JSON as a stream (S4 stream-ified);
-    * schema-on-read per shop, then the same unified transform applies via
-    * foreachBatch over graft.etl.Pipeline. */
-  def readShopStream(spark: SparkSession, adapter: graft.etl.Shops.ShopAdapter,
-      dir: String): DataFrame =
-    spark.readStream.schema(adapter.schema).json(dir)
 }

@@ -1,7 +1,13 @@
 package graft
 
-/** Prints the formatted physical plan of each named query:
-  * `Test/runMain graft.ExplainQ <sfDir> q101_triangles,q147_kcore`.
+/** Prints the optimised logical plan and the formatted physical plan of each
+  * named query or shop job:
+  * `Test/runMain graft.ExplainQ <dir> q101_triangles,job:JUMBO`.
+  *
+  * A query name reads its tables from `<dir>` (a scale-factor directory). A
+  * name `job:<SHOP>` plans that shop's job as `Jobs.runShopJob` writes it:
+  * `Pipeline.process` over `readShopJsonLines` of `<dir>/<SHOP>.jsonl` (an
+  * `etl_bulk` inputs directory), with the job's run counters.
   *
   * Expression ids (`#123`), exchange ids (`plan_id=7`), RDD ids
   * (`MapPartitionsRDD[45]`) and the source line of an RDD's call site
@@ -18,10 +24,18 @@ object ExplainQ {
     val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel("WARN")
     for (name <- args(1).split(",")) {
-      val df = SparkEntry.queries(name)(spark, args(0))
+      val df = if (name.startsWith("job:")) {
+        val shop = name.stripPrefix("job:")
+        val adapter = etl.Shops.forShop(shop)
+        val (good, _) =
+          etl.Pipeline.readShopJsonLines(spark, adapter, s"${args(0)}/$shop.jsonl")
+        etl.Sinks.withRunCounters(etl.Pipeline.process(adapter, good))
+      } else SparkEntry.queries(name)(spark, args(0))
+      val qe = df.queryExecution
       println(s"==== $name")
-      println(normalise(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)))
+      println("== Optimized Logical Plan ==")
+      println(normalise(qe.optimizedPlan.treeString))
+      println(normalise(qe.explainString(org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
   }

@@ -15,7 +15,13 @@ class GenericAdapterSpec extends SparkSpec {
                  |"imageUrl":"http://x/i.jpg","quantity":"500","unit":"g",
                  |"promotion":"yes"}""".stripMargin.replace("\n", "")),
       "KRUIDVAT", "run1")
-    assert(df.columns.toSeq == graft.model.UnifiedProduct.requiredFields)
+    import spark.implicits._
+    import graft.model.UnifiedProduct
+    assert(df.columns.toSeq == UnifiedProduct.requiredFields)
+    assert(df.schema.map(f => (f.name, f.dataType)) ==
+      UnifiedProduct.schema.map(f => (f.name, f.dataType)))
+    // a null in a non-Option field fails the decode
+    assert(df.as[UnifiedProduct].collect().length == 1)
     val r = df.collect().head
     assert(r.getAs[String]("unified_id") == "KRUIDVAT_r1_run1")
     assert(r.getAs[String]("title") == "Fallback Naam")

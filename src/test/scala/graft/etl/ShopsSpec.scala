@@ -291,8 +291,36 @@ class ShopsSpec extends SparkSpec {
   // ---- cross-cutting ----
 
   test("unified output has exactly the 32 contract fields in order") {
-    val out = Pipeline.process(Shops.Jumbo, readJson(Shops.Jumbo, jumboBase))
-    assert(out.columns.toSeq == graft.model.UnifiedProduct.requiredFields)
+    import spark.implicits._
+    import graft.model.UnifiedProduct
+    val aldi = Shops.AldiAdapter(java.time.LocalDate.of(2026, 8, 12))
+    // per shop a plain row and a promotion row, so both the defaulted and
+    // the derived promotion fields are read
+    val inputs = Seq[(Shops.ShopAdapter, Seq[String])](
+      Shops.Ah -> Seq(ahBase, ahBase.replace("123456", "7").replace("\"currentPrice\":2.99",
+        "\"currentPrice\":2.49,\"isBonus\":true,\"bonusMechanism\":\"2 voor 4.00\"")),
+      Shops.Jumbo -> Seq(jumboBase, jumboBase.replace("\"123\"", "\"9\"").replace(
+        "\"inAssortment\"", "\"promotions\":[{\"tags\":[{\"text\":\"2 voor 3.00\"}]}],\"inAssortment\"")),
+      aldi -> Seq(
+        """{"articleNumber":"A1","title":"Chocolade","price":"1.99","oldPrice":"2.99"}""",
+        """{"articleNumber":"A2","title":"Sap","priceFormatted":"€ 1,49"}"""),
+      Shops.Plus -> Seq(
+        """{"PLP_Str":{"SKU":"P1","Name":"Gehakt","OriginalPrice":"4.50","IsAvailable":true,
+          |"Categories":{"List":[{"Name":"vlees"}]}}}""".stripMargin.replace("\n", ""),
+        """{"PLP_Str":{"SKU":"P2","Name":"Koek","OriginalPrice":"2.00","NewPrice":"1.50",
+          |"PromotionLabel":"25% korting","IsAvailable":true,
+          |"Categories":{"List":[{"Name":"snoep"}]}}}""".stripMargin.replace("\n", "")))
+    val contract = UnifiedProduct.schema.map(f => (f.name, f.dataType))
+    for ((adapter, rows) <- inputs;
+         (stage, out) <- Seq("unified" -> adapter.unified(readJson(adapter, rows: _*)),
+           "process" -> Pipeline.process(adapter, readJson(adapter, rows: _*)))) {
+      withClue(s"${adapter.shopType} $stage: ") {
+        assert(out.columns.toSeq == UnifiedProduct.requiredFields)
+        assert(out.schema.map(f => (f.name, f.dataType)) == contract)
+        // a null in a non-Option field fails the decode
+        assert(out.as[UnifiedProduct].collect().length == 2)
+      }
+    }
   }
 
   test("dedupe keeps the highest quality score per unified_id") {
